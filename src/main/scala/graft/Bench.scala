@@ -2,84 +2,42 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum}
 
-/** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR.
-  * Results are fully materialized through a noop-format write — a
-  * `count()` would let Catalyst prune every unused projected expression
-  * and under-measure expression-heavy queries.
+/** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR, in
+  * name order, after an untimed warmup. Each result is fully
+  * materialized through a noop-format write (a `count()` would let
+  * Catalyst prune unused projections), and the cache is cleared and a
+  * full GC run between queries, outside the timed window.
   *
-  * Output contract (the driver captures a BOUNDED tail of stdout —
-  * measured EXACTLY 2000 bytes in the r9/r10/r11 artifacts — which in
-  * round 6 truncated one giant 3.5 KB JSON line mid-way and lost the
-  * headline total):
-  *   - each query prints its own short line `{"q":"name","sec":N}` as it
-  *     finishes (key deliberately NOT "metric" so the driver's
-  *     `{"metric"...}` extraction can't latch onto a partial line);
-  *   - every 15 queries a short `{"sched_mid":...,"max":...,"after":n}`
-  *     line streams the mid-suite host-health probe (see below) so a
-  *     storm window is attributable per-query from the artifact alone;
-  *   - any query reading >1.5x its committed local comparator
-  *     ([[BenchRef]]) triggers an immediate extra probe and a
-  *     `{"sched_hit":...}` line, so a sub-window storm the fixed
-  *     15-query probe cadence misses is still self-adjudicating (the
-  *     r11 stats_topk/text_entropy blind spot); after the suite, each
-  *     hit query is re-run once untimed and the re-read seconds (`rt`)
-  *     land in the file record and probe-context line WITH their own
-  *     fresh probe p50 and collector ms (r16 verdict item 1: a window
-  *     that outlives the suite otherwise makes the re-read look like
-  *     code), so a healthy-axes hit self-adjudicates code-vs-window
-  *     in-artifact (r15 verdict item 1);
-  *   - just before the total, the COMPLETE per-query vector streams as
-  *     a positional block (r11 verdict item 1): a header
-  *     `{"qn":N,"ord":"alpha","unit":"sec"}` then `{"qv":k,"t":[...]}`
-  *     chunk lines whose concatenated arrays are the per-query seconds
-  *     in suite order — which is ALWAYS sorted name order
-  *     (SparkEntry.selectNames). Positional, because any named
-  *     encoding of 107 entries (~1.4 KB of names alone) cannot fit the
-  *     2000-byte tail next to the total line; the ~970-byte positional
-  *     block leaves ~1 KB of tail for the trailing ~30 streamed NAMED
-  *     lines, which overlap the vector's tail and cross-validate the
-  *     name mapping from inside the artifact itself;
-  *   - between the positional block and the total, one compact
-  *     probe-context line `{"sm":[...],"hn":N,"hits":[[q,r,p50],...]}`
-  *     ([[renderProbeContext]]) replays every mid-suite probe p50 and
-  *     the worst triggered outlier probes — the streamed probe lines
-  *     for the suite's first ~80 queries never survive the tail, which
-  *     in r12 left all three >1.3x movers unadjudicable from the
-  *     artifact alone;
-  *   - the full canonical record (total + NAMED per-query map) is
-  *     written to target/bench.json (override: SPARK_GRAFT_BENCH_OUT) —
-  *     file only since r10: the ~1.9 KB named map line ate the tail;
-  *   - the LAST stdout line is a total-only record (~160 bytes, no
-  *     per-query map) that survives any tail window.
-  *
-  * Host-health self-report (r10): the total record carries a `sched`
-  * probe — median and max of five timed runs (after one untimed
-  * codegen/JIT first-touch) of one fixed shuffle chain — 32 input
-  * slices, an explicit repartition(32) exchange, a 1-row aggregate —
-  * whose per-task work is trivial, taken once after warmup (`pre`)
-  * and once after the suite (`post`). Partition counts are pinned in
-  * the shape, NOT inherited from CPUS, so artifacts from different
-  * configs stay comparable. The number
-  * IS the host's task-dispatch + stage-boundary overhead, independent
-  * of the data and of this repo's code (~0.05 s median on a healthy
-  * box). The post-reboot host measured in BASELINE.md's r10 notes
-  * intermittently inflates exactly that overhead (kernel-time storms;
-  * identical code, identical config: dedup_components 7.4–49 s within
-  * one hour), so per-query comparisons across rounds need to know
-  * which regime the artifact was measured in — this field makes every
-  * artifact carry that context.
+  * Output contract, for a caller that keeps only the last 2000 bytes
+  * of stdout and json-parses the LAST line:
+  *   - each query prints `{"q":name,"sec":N}` as it finishes
+  *     (`"fail":1` added when it threw);
+  *   - the last line is the total record: `metric`, `value` (the sum
+  *     over ALL queries), `unit`, `n`, `fails`, `sched`, `sf`, and a
+  *     `queries` map listing the heaviest queries first, cut so the
+  *     whole line stays within [[MaxLineBytes]];
+  *   - target/bench.json (override: SPARK_GRAFT_BENCH_OUT) holds the
+  *     full record: every query's seconds plus the counted work inside
+  *     its timed window ([[Work]]).
+  * `sched` is the median and max of five runs of one fixed, trivial
+  * shuffle job, taken after warmup (`pre`) and after the suite
+  * (`post`): the host's task-dispatch overhead, independent of this
+  * repo's code.
   */
 object Bench {
+
+  /** Bytes the last stdout line may take: a 2000-byte stdout tail less
+    * room for the newline and a margin. */
+  private[graft] val MaxLineBytes = 1900
 
   /** Locale-pinned seconds formatting: a comma-decimal default locale
     * would corrupt the JSON the driver parses. */
   private[graft] def fmt(sec: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(sec))
 
-  /** JSON string escape for the one externally-controlled field
-    * (sfDir comes from the environment): backslash, quote, and all
-    * control chars — the same posture as Verify's oracle_sql.json
-    * writer. Query names are code-controlled and need none of this. */
+  /** JSON string escape for the one externally-controlled field (sfDir
+    * comes from the environment). Query names are code-controlled and
+    * need none of this. */
   private[graft] def jstr(s: String): String =
     s.flatMap {
       case '"'           => "\\\""
@@ -88,416 +46,64 @@ object Bench {
       case c             => c.toString
     }
 
-  /** Mid-suite probe readings as a JSON fragment for the FILE record:
-    * `(after, p50, max)` = probe run after the `after`-th timed query.
-    * The same readings stream to stdout as their own short lines (see
-    * main), which is what makes a storm window attributable per-query
-    * from the artifact alone — the bracketing pre/post probes proved
-    * blind to mid-suite storms in r10 (BASELINE.md: pipeline_corpus
-    * needed three manual isolated runs to adjudicate one outlier).
-    */
-  private[graft] def midJson(mids: Seq[(Int, Double, Double)]): String =
-    mids.map { case (after, p50, max) =>
-      s"""{"after":$after,"p50":${fmt(p50)},"max":${fmt(max)}}"""
-    }.mkString("\"sched_mid\":[", ",", "]")
-
   private[graft] def schedJson(
       preP50: Double, preMax: Double,
       postP50: Double, postMax: Double): String =
     s""""sched":{"pre_p50":${fmt(preP50)},"pre_max":${fmt(preMax)},"post_p50":${fmt(postP50)},"post_max":${fmt(postMax)}}"""
 
-  /** The driver's contract: it captures a bounded tail of stdout and
-    * json-parses the LAST line. Query names come from the code (no
-    * escaping needed); seconds are locale-pinned. BenchFormatSpec pins
-    * both renderings as parseable JSON with the expected keys. */
-  private[graft] def renderTotalOnly(results: Seq[(String, Double)],
-      sched: String, sfDir: String, fails: Int = 0,
-      armed: Boolean = true): String =
-    // fails: a query that dies mid-run used to record its
-    // time-until-failure as a legitimate result with no marker
-    // anywhere in the tail (stderr is not captured) — a committed
-    // record of such a run would poison the BenchRef comparator.
-    // armed: "zero sched_hit firings" was indistinguishable from
-    // "trigger never armed" (e.g. a trailing slash on SF_DIR).
-    s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec","n":${results.size},"fails":$fails,"armed":$armed,$sched,"sf":"${jstr(sfDir)}"}"""
+  /** Counted work inside one query's timed window. gc_ms, io_mb and
+    * alloc_mb are -1 when the JVM or OS exposes no such counter. */
+  private[graft] final case class Work(gcMs: Long, ioMb: Long,
+      allocMb: Long, tasks: Long, inRows: Long, spillMb: Long,
+      peakMb: Long) {
+    def values: Seq[Long] =
+      Seq(gcMs, ioMb, allocMb, tasks, inRows, spillMb, peakMb)
+  }
+  private[graft] object Work {
+    val keys: Seq[String] = Seq("gc_ms", "io_mb", "alloc_mb", "tasks",
+      "in_rows", "spill_mb", "peak_mb")
+  }
 
+  private def entry(name: String, sec: Double): String =
+    "\"" + name + "\":" + fmt(sec)
+
+  private def utf8Len(s: String): Int =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+
+  /** The last stdout line. `queries` takes the heaviest queries (ties
+    * by name) for as long as the line fits [[MaxLineBytes]]; `value`
+    * and `n` always cover the whole suite. */
+  private[graft] def renderTotal(results: Seq[(String, Double)],
+      sched: String, sfDir: String, fails: Int = 0): String = {
+    val head = s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec","n":${results.size},"fails":$fails,$sched,"sf":"${jstr(sfDir)}","queries":{"""
+    val entries = results.sortBy { case (n, s) => (-s, n) }
+      .map { case (n, s) => entry(n, s) }
+    // line bytes after k entries: head + entries + (k - 1) commas + "}}"
+    val used = entries.scanLeft(utf8Len(head) + 1) {
+      (acc, e) => acc + e.length + 1 }.tail
+    val shown = entries.zip(used).takeWhile(_._2 <= MaxLineBytes).map(_._1)
+    shown.mkString(head, ",", "}}")
+  }
+
+  /** The file record: every query's seconds in suite order and one map
+    * per [[Work.keys]] counter. */
   private[graft] def renderFullRecord(results: Seq[(String, Double)],
-      sched: String, sfDir: String,
-      mids: Seq[(Int, Double, Double)] = Seq.empty,
-      hits: Seq[Hit] = Seq.empty,
-      gcs: Seq[(String, Long)] = Seq.empty,
-      ios: Seq[(String, Long)] = Seq.empty,
-      als: Seq[(String, Long)] = Seq.empty,
-      tks: Seq[(String, Long)] = Seq.empty,
-      recs: Seq[(String, Long)] = Seq.empty, fails: Int = 0,
-      armed: Boolean = true, cpus: String = "",
-      sps: Seq[(String, Long)] = Seq.empty,
-      pks: Seq[(String, Long)] = Seq.empty,
-      subs: Seq[SubHit] = Seq.empty,
-      volDirty: Seq[String] = Seq.empty): String = {
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // cpus makes the FILE record self-describe its regime: BenchRef's
-    // refArmed gate compares SPARK_GRAFT_CPUS to BenchRef.cpus, and the
-    // gen_benchref.py transcriber used to hardcode 32 into the emitted
-    // provenance — re-recording the comparator on a different core
-    // count would have silently disarmed (or mis-armed) every future
-    // run. Empty = omitted, so pre-r17 records stay parseable.
-    val cj = if (cpus.isEmpty) "" else s""""cpus":"${jstr(cpus)}","""
-    // per-query gc_ms, io_mb, and alloc_mb go to the FILE record only
-    // (no tail budget there): the in-tail probe context carries them
-    // for the capped worst HITS, but adjudicating a 1.3x mover that
-    // never crossed the 1.5x hit gate needs the same signals — these
-    // maps make every mover in a committed BENCH_LOCAL record
-    // adjudicable after the fact on all four non-host axes.
-    val gj = gcs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("\"gc_ms\":{", ",", "}")
-    val ij = ios.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("\"io_mb\":{", ",", "}")
-    val aj = als.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("\"alloc_mb\":{", ",", "}")
-    // per-query completed-task and input-record counts (r18 verdict
-    // item 3) — the DETERMINISTIC volume axes: alloc_mb drifts ±20% on
-    // identical code (GC timing moves TLAB waste), but an identical
-    // plan over identical data completes an identical task count and
-    // reads an identical record count, and both MULTIPLY under the
-    // recompute class — the in-artifact adjudicator that settles
-    // recompute-vs-slower-work without code reading.
-    val tj = tks.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("\"tasks\":{", ",", "}")
-    val rj = recs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("\"in_rows\":{", ",", "}")
-    // spill_mb / peak_mb (r19 verdict item 1) — the memory-pressure
-    // axes: spilled bytes are near-deterministic for identical
-    // code+data+config on a healthy box (ZERO for most queries), and
-    // peak per-task execution memory is the direct witness of the
-    // "execution-memory pressure forces spill/fallback buffers"
-    // hypothesis the first seven axes could not test — five driver
-    // rounds of minhash allocating 1.5-1.7x committed at byte-identical
-    // task/row volumes needed exactly these two numbers.
-    val sj = sps.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("\"spill_mb\":{", ",", "}")
-    val pj = pks.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("\"peak_mb\":{", ",", "}")
-    // vol_dirty (ADVICE r19): queries whose volume window opened or
-    // closed on an UNQUIESCED counter read (the ~1 s spin cap was
-    // exhausted) — their tasks/in_rows may include straggler events
-    // from the adjacent window and must not be read as exact
-    // committed-level comparisons. A bare name taints the TIMED
-    // reading (the tasks/in_rows maps); "name:retry" taints only that
-    // hit's rt_tk/rt_rec. Empty on every healthy run.
-    val vd = volDirty.map("\"" + _ + "\"")
-      .mkString("\"vol_dirty\":[", ",", "]")
-    s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec","fails":$fails,"armed":$armed,$cj"queries":$qs,$gj,$ij,$aj,$tj,$rj,$sj,$pj,$vd,$sched,${midJson(mids)},${hitsJson(hits)},${subsJson(subs)},"sf":"${jstr(sfDir)}"}"""
-  }
-
-  /** One triggered outlier probe with everything the in-artifact
-    * adjudication needs. Fire-time axes: `r` observed/committed ratio,
-    * `p50`/`max` the fresh host probe, `gc` collector ms inside the
-    * query's window, `io` storage-read MB inside it, `al` MB ALLOCATED
-    * inside it (r16 verdict item 3 — see main's allocBytes). Retry-time
-    * context (r16 verdict item 1): `rt` the post-suite re-run seconds,
-    * `rtP50` a FRESH host probe taken immediately before that re-run,
-    * `rtGc` the collector ms inside the re-run's own window — in
-    * BENCH_r16 the bare rt under-cleared 4 of 6 capped hits because
-    * the retry shares the suite's JVM and the degraded window
-    * persisted; an elevated rt whose own probe/gc context is ALSO
-    * inflated now self-adjudicates as window instead of reading as
-    * "code reproduces". `rtAl` (r17 verdict item 3) is the MB allocated
-    * inside the re-run's own window — the one host-independent axis:
-    * an elevated rt with rtAl ≈ the committed alloc_mb is the box
-    * collecting/scheduling slower (window), rtAl inflated alongside is
-    * the same recompute/regression class the fire-time al axis reads.
-    * `tk`/`rec` (r18 verdict item 3) are the completed-task and
-    * input-record counts inside the fire-time window, `rtTk`/`rtRec`
-    * the same inside the re-run's window — the DETERMINISTIC volume
-    * axes (see renderFullRecord's tasks/in_rows note): identical plans
-    * complete identical task/record counts, so a reading that
-    * MULTIPLIES the committed map is the recompute class beyond
-    * argument, while alloc_mb alone drifts ±20% on identical code.
-    * `sp`/`pk` (r19 verdict item 1) are the MEMORY-PRESSURE axes
-    * inside the fire-time window, `rtSp`/`rtPk` the same inside the
-    * re-run's: sp = MB spilled (memory+disk), pk = the max per-task
-    * peakExecutionMemory in MB. They test the one hypothesis the first
-    * seven axes cannot — execution-memory pressure forcing spill /
-    * hash-fallback buffers: identical volumes + inflated alloc +
-    * NONZERO sp (or pk at the committed level's multiple) = the box
-    * ran the same work under memory pressure; sp 0 and pk flat next to
-    * inflated alloc leaves GC/TLAB accounting as the remaining
-    * explanation.
-    * Sentinels: rt -1 = beyond the retry cap
-    * (rtP50/rtGc/rtAl/rtTk/rtRec/rtSp/rtPk are -1 too), rt -2 = the
-    * re-run failed
-    * (its context is still real — the probe ran and the collector was
-    * measured). One overload to read correctly: rtAl -1 NEXT TO a live
-    * rt (rt > 0 or -2) is the fire-time al axis's own no-counters
-    * sentinel — a JVM without thread-allocation support reports -1 on
-    * both axes — not "beyond the retry cap"; adjudicate such a hit on
-    * the remaining axes rather than treating -1 as a volume. tk/rec/
-    * sp/pk have no capability sentinel (the listener always runs);
-    * their -1 appears only as the un-retried default.
-    */
-  private[graft] final case class Hit(q: String, r: Double, p50: Double,
-      max: Double, gc: Long, io: Long, al: Long, tk: Long = -1L,
-      rec: Long = -1L, rt: Double = -1.0,
-      rtP50: Double = -1.0, rtGc: Long = -1L, rtAl: Long = -1L,
-      rtTk: Long = -1L, rtRec: Long = -1L, sp: Long = -1L,
-      pk: Long = -1L, rtSp: Long = -1L, rtPk: Long = -1L)
-
-  /** A >1.3x mover that stayed under the hit trigger (r19 verdict
-    * item 2): fire-time VOLUMES only — alloc/tasks/in_rows/spill/peak —
-    * no probe and no post-suite retry (those remain the hits' cost).
-    * "Under the hit trigger" means under EITHER of its gates, so `r`
-    * can legitimately exceed 1.5 here: a fast query whose ratio passed
-    * 1.5x but whose absolute excess stayed under the hit's 0.2 s floor
-    * lands in sub_hits (e.g. committed 0.2 s read at 0.35 s = r 1.8) —
-    * that is the absolute-floor case working as designed, not record
-    * corruption.
-    * dedup_ngram_jaccard read 1.48x in r19 and the artifact carried no
-    * context for it; this record makes every >1.3x mover adjudicable
-    * on the deterministic axes without leaning on round history.
-    */
-  private[graft] final case class SubHit(q: String, r: Double, al: Long,
-      tk: Long, rec: Long, sp: Long, pk: Long)
-
-  /** Sub-hit entries for the FILE record (full fidelity, unclamped —
-    * the tail clamp is renderProbeContext's alone). */
-  private[graft] def subsJson(subs: Seq[SubHit]): String =
-    subs.map { s =>
-      s"""{"q":"${s.q}","r":${fmt1(s.r)},"al":${s.al},"tk":${s.tk},"rec":${s.rec},"sp":${s.sp},"pk":${s.pk}}"""
-    }.mkString("\"sub_hits\":[", ",", "]")
-
-  /** Streamed sub-hit line (fires at >1.3x, under the hit trigger):
-    * volumes only — deliberately NO probe run (a sub-hit is not worth
-    * a ~0.2 s probe; its adjudication rides on the deterministic axes
-    * vs the committed maps). ~90 bytes, rides the sacrificial named-
-    * line tail budget; the probe-context line's spare slots carry the
-    * worst of these through the tail. */
-  private[graft] def renderSubHit(name: String, ratio: Double, alMb: Long,
-      tk: Long, rec: Long, sp: Long, pk: Long): String =
-    s"""{"sub_hit":"$name","r":${fmt1(ratio)},"al":$alMb,"tk":$tk,"rec":$rec,"sp":$sp,"pk":$pk}"""
-
-  /** Outlier-probe readings for the FILE record: one object per
-    * triggered [[renderSchedHit]] line, plus the post-suite re-run
-    * seconds (`rt`, see [[renderRetry]]) and its context. */
-  private[graft] def hitsJson(hits: Seq[Hit]): String =
-    hits.map { h =>
-      s"""{"q":"${h.q}","r":${fmt1(h.r)},"p50":${fmt(h.p50)},"max":${fmt(h.max)},"gc":${h.gc},"io":${h.io},"al":${h.al},"tk":${h.tk},"rec":${h.rec},"sp":${h.sp},"pk":${h.pk},"rt":${renderRetry(h.rt)},"rt_p50":${renderRetry(h.rtP50)},"rt_gc":${h.rtGc},"rt_al":${h.rtAl},"rt_tk":${h.rtTk},"rt_rec":${h.rtRec},"rt_sp":${h.rtSp},"rt_pk":${h.rtPk}}"""
-    }.mkString("\"sched_hit\":[", ",", "]")
-
-  /** Post-suite re-run seconds of a hit query (r15 verdict item 1):
-    * -1 = not re-run (beyond the retry cap), -2 = the re-run itself
-    * failed; otherwise the untimed-territory seconds. Rendered as a
-    * bare integer for the sentinels so they can never read as a
-    * legitimate (negative) duration. Also renders the retry-context
-    * p50, whose only sentinel is -1 (context missing).
-    */
-  private[graft] def renderRetry(rt: Double): String =
-    if (rt < 0) rt.toInt.toString else fmt(rt)
-
-  /** The probe-context retry entry: the bare -1 sentinel when the hit
-    * was never re-run, else `[rt, rt_p50, rt_gc, rt_al, rt_tk, rt_rec,
-    * rt_sp, rt_pk]` — the re-run seconds WITH their own fresh host probe,
-    * collector reading, allocation volume, and (r18 verdict item 3)
-    * the deterministic task/record volumes, so an elevated rt carries
-    * the evidence to call itself window-or-code (r16 verdict item 1;
-    * rt_al r17 item 3; rt_tk/rt_rec close the residual gap — rt_al
-    * drifts ±20% on identical code, task/record counts do not, and
-    * they MULTIPLY under recompute). rt = -2 (re-run failed) keeps its
-    * context.
-    */
-  private[graft] def renderRetryCtx(h: Hit): String =
-    if (h.rt == -1.0) "-1"
-    else s"[${renderRetry(h.rt)},${renderRetry(h.rtP50)},${h.rtGc},${h.rtAl},${h.rtTk},${h.rtRec},${h.rtSp},${h.rtPk}]"
-
-  /** One-decimal ratio formatting (locale-pinned, same reason as fmt). */
-  private[graft] def fmt1(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.1f", Double.box(x))
-
-  /** ONE cap for both the probe-context `hits` entries and the
-    * post-suite retry set: if they diverged, the context line's worst-N
-    * could carry rt=-1 "beyond the cap" entries while cheaper hits got
-    * re-run — the exact adjudication gap the retry exists to close.
-    * 6 → 5 in r20: each retained entry gained four memory-pressure
-    * values (sp/pk fire-time and retry — r19 verdict item 1) and the
-    * sub-hit slots (item 2), and the 2000-byte tail budget funds the
-    * richer entries by narrowing the cap — five fully-adjudicable
-    * entries beat six that cannot answer the spill question. `hn`
-    * still records the true count, so the cap is never a silent
-    * truncation.
-    */
-  private[graft] val MaxHits = 5
-
-  /** Streamed outlier-probe line: emitted immediately after a timed
-    * query reads >1.5x its committed comparator value ([[BenchRef]]),
-    * carrying a FRESH fixed-shape probe reading — if the probe is also
-    * inflated the outlier self-adjudicates as host, if healthy the
-    * outlier is presumptively code and worth an isolated re-run. `r` is
-    * the observed/committed ratio; `gc` is the stop-the-world collector
-    * time (ms) that landed inside the query's own timed window (r13
-    * verdict item 1) — the third adjudication axis: healthy probe +
-    * high gc = in-JVM pressure the host probe cannot see. `io` is the
-    * storage-layer read delta (MB) inside the same window (r14 verdict
-    * item 1) — the fourth axis: healthy probe + healthy gc + inflated
-    * io vs the comparator's io_mb map = page-cache/shuffle-dir I/O
-    * pressure. `al` is the MB allocated inside the window (r16 verdict
-    * item 3) — the fifth axis, and the one that disambiguates gc: gc_ms
-    * is a TIME, so 10x the committed reading cannot say "collector ran
-    * slower" (host) vs "query allocated more" (code); alloc volume is
-    * host-independent for identical code+data, so inflated gc + flat
-    * alloc = host window, inflated both = a real allocation
-    * regression. All axes healthy = presumptive code. ~80 bytes;
-    * streams between the per-query lines, never inside the
-    * end-of-suite block. The post-suite re-run (`rt`) is NOT here — at
-    * fire time it does not exist yet; it lands in the file record and
-    * the probe-context line.
-    */
-  private[graft] def renderSchedHit(name: String, ratio: Double,
-      p50: Double, max: Double, gcMs: Long, ioMb: Long,
-      alMb: Long, tk: Long = -1L, rec: Long = -1L, sp: Long = -1L,
-      pk: Long = -1L): String =
-    s"""{"sched_hit":${fmt(p50)},"max":${fmt(max)},"q":"$name","r":${fmt1(ratio)},"gc":$gcMs,"io":$ioMb,"al":$alMb,"tk":$tk,"rec":$rec,"sp":$sp,"pk":$pk}"""
-
-  /** End-of-suite probe-context line (r12 verdict item 1): the streamed
-    * `sched_mid`/`sched_hit` lines for the first ~80 queries never
-    * survive the 2000-byte tail, so in r12 all three >1.3x movers fired
-    * in the cut head and the artifact could not say host-or-code even
-    * though every probe HAD fired. This one line replays the probe
-    * story compactly inside the end-of-suite block:
-    *   - `sm`: every mid-suite probe's p50, in cadence order (~7 values
-    *     on the 107-query suite) — a storm window shows up as an
-    *     inflated entry at its position;
-    *   - `hn`: the TRUE count of triggered outlier probes;
-    *   - `hits`: the worst `maxHits` of them by ratio as
-    *     `[name, ratio, probe_p50, gc_ms, io_mb, alloc_mb, tasks,
-    *     in_rows, spill_mb, peak_mb, retry]` entries. The probe
-    *     p50 sees the HOST (inflated ⇒ scheduler storm); gc_ms sees the
-    *     JVM (the collector time inside that query's own timed window —
-    *     r13's decontaminate hit carried a healthy 0.021 probe and
-    *     would still have been old-gen churn, the case the p50 alone
-    *     misreads as code); io_mb sees the STORAGE layer (r14's
-    *     dedup_minhash_lsh hit was healthy on BOTH other axes on
-    *     untouched code — the remaining pressure class is a cold page
-    *     cache / contended shuffle dir re-reading bytes the comparator
-    *     run got for free); alloc_mb sees the ALLOCATION volume (r16
-    *     verdict item 3: the driver's minhash hit read gc 2,169 ms —
-    *     10x committed — with probe and io healthy, and gc TIME alone
-    *     could not say slower-collector-vs-bigger-allocation; volume
-    *     is host-independent, so inflated gc + flat alloc = host).
-    *     Healthy probe + high gc + high alloc ⇒ a real allocation
-    *     regression; all fire-time axes healthy ⇒ presumptive code,
-    *     which the LAST entry adjudicates in-artifact (r15 verdict
-    *     item 1, context r16 item 1, alloc r17 item 3, volumes r18
-    *     item 3): `tasks`/`in_rows` are the fire-time deterministic
-    *     volume counts (identical plans complete identical counts;
-    *     recompute MULTIPLIES them — the axis that settles what
-    *     alloc_mb's ±20% drift cannot), and `retry` is -1
-    *     when the hit was beyond the retry cap, else
-    *     `[rt, rt_p50, rt_gc, rt_al, rt_tk, rt_rec, rt_sp, rt_pk]` —
-    *     one post-suite UNTIMED re-run of the hit query (rt; -2 = the
-    *     re-run failed) with a FRESH host probe taken right before it,
-    *     the collector ms, the MB allocated, the MB spilled, and the
-    *     per-task peak execution memory inside the re-run's
-    *     own window. In
-    *     BENCH_r16 the bare rt under-cleared 4 of 6 capped hits: the
-    *     retry shares the suite's JVM, and when the degraded window
-    *     outlives the suite an elevated rt read as "code reproduces";
-    *     with its own context, elevated rt + inflated rt_p50/rt_gc
-    *     self-adjudicates as window in-artifact — and rt_al is the
-    *     host-independent tiebreak for the healthy-context case
-    *     (committed-level rt_al = box sensitivity; inflated rt_al =
-    *     the recompute/regression class). Capped (hn records
-    *     what the cap hides) so a pathological run cannot eat the
-    *     tail: ~60 bytes healthy, ~640 worst-case at the cap — inside
-    *     BenchFormatSpec's budget.
-    */
-  private[graft] def renderProbeContext(
-      mids: Seq[(Int, Double, Double)],
-      hits: Seq[Hit],
-      subs: Seq[SubHit] = Seq.empty,
-      maxHits: Int = MaxHits): String = {
-    val sm = mids.map(m => fmt(m._2)).mkString("[", ",", "]")
-    // entry shape since r20: [q, ratio, probe_p50, gc_ms, io_mb,
-    // alloc_mb, tasks, in_rows, spill_mb, peak_mb, retry] — tasks/
-    // in_rows are the deterministic volume axes (r18 verdict item 3),
-    // spill_mb/peak_mb the memory-pressure axes (r19 item 1). Values
-    // are CLAMPED in THIS tail line only (the file record keeps exact
-    // counts): the tail-budget proof needs a deterministic worst case,
-    // and a value at the clamp is already an unambiguous signal.
-    // Clamp widths: tasks 6 digits / in_rows 9 (sf0.1 runs 10²–10³
-    // tasks and 10⁶–10⁸ rows per query — a 3x recompute stays below
-    // the clamp, so multiplication is always readable); gc/io/al/sp/pk
-    // 5 digits (100 s of collector time, 100 GB read / allocated /
-    // spilled, 100 GB per-task peak — each beyond any plausible sf0.1
-    // reading, and a clamped value still reads as "extreme", which is
-    // all the adjudication needs at that magnitude).
-    def mb(h: Hit) = h.copy(gc = clampVol(h.gc, 99999L),
-      io = clampVol(h.io, 99999L), al = clampVol(h.al, 99999L),
-      sp = clampVol(h.sp, 99999L), pk = clampVol(h.pk, 99999L),
-      tk = clampVol(h.tk, 999999L), rec = clampVol(h.rec, 999999999L),
-      rtGc = clampVol(h.rtGc, 99999L), rtAl = clampVol(h.rtAl, 99999L),
-      rtSp = clampVol(h.rtSp, 99999L), rtPk = clampVol(h.rtPk, 99999L),
-      rtTk = clampVol(h.rtTk, 999999L),
-      rtRec = clampVol(h.rtRec, 999999999L))
-    val shown = hits.sortBy(-_.r).take(maxHits)
-    val hs = shown.map { h0 =>
-      val hc = mb(h0)
-      s"""["${hc.q}",${fmt1(hc.r)},${fmt(hc.p50)},${hc.gc},${hc.io},${hc.al},${hc.tk},${hc.rec},${hc.sp},${hc.pk},${renderRetryCtx(hc)}]"""
-    }.mkString("[", ",", "]")
-    // names-only overflow (r20 verdict item 7): when the cap is
-    // saturated, `hn` says how many hits the cap hid but not WHICH —
-    // in BENCH_r20 the 6th hit's identity fell out of the artifact
-    // entirely. Three clamped names cost ~70 worst-case bytes (funded
-    // inside the 2000-byte budget, re-proven by BenchFormatSpec); a
-    // storm beyond cap+3 still loses names 9+, but the file record
-    // always carries every hit in full.
-    val over = hits.sortBy(-_.r).slice(maxHits, maxHits + 3)
-      .map(h => "\"" + h.q.take(20) + "\"").mkString("[", ",", "]")
-    // sub-hit entries (r19 verdict item 2) fill the SLOTS the hits left
-    // unused — one shared budget, so the worst tail case stays the
-    // all-hits one (a hit entry is ~2x a sub entry) and a 5-hit storm
-    // never gets its adjudication context squeezed by movers. Entry:
-    // [q, ratio, alloc_mb, tasks, in_rows, spill_mb, peak_mb] — the
-    // fire-time volumes only; `sn` records the TRUE sub count so the
-    // slot sharing is never a silent truncation.
-    val ss = subs.sortBy(-_.r).take(math.max(0, maxHits - shown.size))
-      .map { s =>
-        s"""["${s.q}",${fmt1(s.r)},${clampVol(s.al, 99999L)},${clampVol(s.tk, 999999L)},${clampVol(s.rec, 999999999L)},${clampVol(s.sp, 99999L)},${clampVol(s.pk, 99999L)}]"""
-      }.mkString("[", ",", "]")
-    s"""{"sm":$sm,"hn":${hits.size},"hits":$hs,"over":$over,"sn":${subs.size},"sub":$ss}"""
-  }
-
-  /** Tail-line volume clamp (sentinels pass through untouched). */
-  private[graft] def clampVol(v: Long, cap: Long): Long =
-    if (v < 0) v else math.min(v, cap)
-
-  /** End-of-suite positional per-query block (see the object scaladoc
-    * for why positional): a header line with the count, ordering
-    * contract, and unit, then ceil(n/40) chunk lines whose `t` arrays
-    * concatenate (in `qv` order) to the per-query seconds in suite
-    * order. Chunked at 40 values (~250 bytes/line, far under the
-    * 1.9 KB single-line truncation lesson from r9) so a worst-case
-    * mid-line tail cut loses one chunk, not the whole vector.
-    * BenchFormatSpec pins the shape AND the full-suite byte budget.
-    */
-  private[graft] def renderQvLines(results: Seq[(String, Double)],
-      chunk: Int = 40): Seq[String] = {
-    val header =
-      s"""{"qn":${results.size},"ord":"alpha","unit":"sec"}"""
-    val chunks = results.map(_._2).grouped(chunk).zipWithIndex.map {
-      case (vs, k) => s"""{"qv":$k,"t":[${vs.map(fmt).mkString(",")}]}"""
-    }.toSeq
-    header +: chunks
+      work: Seq[(String, Work)], sched: String, sfDir: String, fails: Int,
+      cpus: String): String = {
+    val qs = results.map { case (n, s) => entry(n, s) }.mkString("{", ",", "}")
+    val maps = Work.keys.zipWithIndex.map { case (k, i) =>
+      work.map { case (n, w) => "\"" + n + "\":" + w.values(i) }
+        .mkString("\"" + k + "\":{", ",", "}")
+    }.mkString(",")
+    s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec","fails":$fails,"cpus":"${jstr(cpus)}","queries":$qs,$maps,$sched,"sf":"${jstr(sfDir)}"}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
-    // memoryPins (r21): plan-neutral per-task allocation-footprint pins
-    // (page size, sort-path shuffle writer) — see Engine.memoryPins.
-    // They change no query result and no plan shape; the timed region,
-    // warmup set, and methodology are unchanged.
+    // memoryPins: plan-neutral per-task allocation-footprint pins (page
+    // size, sort-path shuffle writer) — see Engine.memoryPins.
     val spark = Engine.memoryPins(Engine.semanticPins(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -506,42 +112,20 @@ object Bench {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")))
       .getOrCreate()
-    // ERROR, not WARN: the driver captures a BOUNDED tail of stdout, and
-    // log4j shares that stream in this harness. In r10 eight harmless
-    // `WindowExec: No Partition Defined` WARN lines (vocab_topk's rank
-    // window over its top-100 — metadata-scale by construction, see
-    // PlanShapeSpec) landed between the streamed per-query lines and
-    // rationed the tail down to 15 of 107 data points. Nothing at WARN
-    // is actionable during a timed suite; real failures still reach
-    // stderr through materialize()'s own handler.
+    // log4j shares stdout in this harness: keep harmless WARN lines out
+    // of the bounded tail. Query failures still reach stderr below.
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Cumulative stop-the-world GC time across all collectors, for the
-    // per-query gc_ms delta below (r13 verdict item 1): the host-
-    // scheduling probe cannot see IN-PROCESS pressure — r13's one
-    // sched_hit (decontaminate 1.7x) fired with a HEALTHY probe because
-    // the slowdown was old-gen churn inside this JVM, the exact effect
-    // r9 profiled at 4.8 s mid-suite vs 1.5 s isolated. getCollectionTime
-    // is "approximate accumulated elapsed ms" and may return -1 when
-    // undefined — clamped to 0 so one exotic collector cannot poison the
-    // sum.
+    // Cumulative stop-the-world GC ms across collectors; -1 readings
+    // (undefined) clamp to 0 so one exotic collector cannot poison it.
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
 
-    // Cumulative bytes this process actually fetched from the storage
-    // layer (post page cache), for the per-query io_mb delta — the
-    // FOURTH adjudication axis (r14 verdict item 1): the r14
-    // dedup_minhash_lsh hit carried a healthy probe p50 AND healthy
-    // gc_ms, leaving "presumptive code" on code that was byte-identical
-    // to the prior round — the one pressure class neither axis sees is
-    // I/O (a cold page cache or contended shuffle dir makes the SAME
-    // plan re-read gigabytes it normally gets for free). An inflated
-    // io_mb against the committed comparator's map says exactly that.
-    // -1 = /proc/self/io unavailable (non-Linux or restricted), kept
-    // distinct from a genuine 0 so "no reads" never means "no signal".
+    // Bytes this process fetched from the storage layer (post page
+    // cache); -1 when /proc/self/io is unavailable.
     def ioReadBytes(): Long =
       try {
         val src = scala.io.Source.fromFile("/proc/self/io")
@@ -553,21 +137,10 @@ object Bench {
     def ioDelta(before: Long, after: Long): Long =
       if (before < 0 || after < 0) -1L else (after - before) / 1000000L
 
-    // Bytes allocated across ALL live JVM threads, for the per-query
-    // alloc_mb delta — the FIFTH adjudication axis (r16 verdict item 3):
-    // gc_ms is a TIME, so the driver's minhash reading of 2,169 ms (10x
-    // committed, probe healthy, io 0) could not distinguish "the
-    // collector ran slower" (host memory pressure, the r9 class) from
-    // "the query allocated more" (a real code regression). Allocation
-    // VOLUME is host-independent for identical code+data+config, so an
-    // inflated gc_ms next to a committed-level alloc_mb self-adjudicates
-    // as host. Known approximations, bounded by design: a thread that
-    // EXITS inside the window takes its lifetime count with it (the
-    // delta clamps at 0) and a thread BORN inside it contributes its
-    // whole life — Spark's local-mode executor pool lives for the whole
-    // suite, so both effects are dispatch-thread noise, not data-plane
-    // volume. -1 = this JVM exposes no allocation counters (kept
-    // distinct from a genuine 0, same posture as io_mb).
+    // Bytes allocated across all live JVM threads; -1 when the JVM has
+    // no allocation counters. A thread that exits inside the window
+    // takes its count with it (the delta clamps at 0); Spark's
+    // local-mode executor pool lives for the whole suite.
     val threadMx: Option[com.sun.management.ThreadMXBean] =
       java.lang.management.ManagementFactory.getThreadMXBean match {
         case t: com.sun.management.ThreadMXBean
@@ -585,32 +158,12 @@ object Bench {
       if (before < 0 || after < 0) -1L
       else math.max(0L, (after - before) / 1000000L)
 
-    // Completed-task and input-record counters, for the per-query
-    // tasks/in_rows deltas — the SIXTH and SEVENTH adjudication axes
-    // (r18 verdict item 3), and the first DETERMINISTIC volume ones:
-    // alloc_mb drifts ±20% on identical code (GC timing moves TLAB
-    // waste between windows — simhash read 4,280 committed vs 5,095
-    // local-r18 on byte-identical code), so a 1.5x alloc reading still
-    // needed code-reading to adjudicate. An identical plan over
-    // identical data completes an IDENTICAL task count and reads an
-    // IDENTICAL record count (inputMetrics counts datasource AND cache
-    // reads), and a cache-miss recompute MULTIPLIES both — so
-    // tasks/in_rows vs the committed maps settles recompute-vs-
-    // slower-work from the artifact alone. Listener events post
-    // asynchronously; volumes() below quiesces on two stable 20 ms
-    // reads (untimed territory — the seconds are already captured).
+    // Completed tasks, input records and spilled bytes (cumulative), and
+    // the max per-task peak execution memory (reset per window). An
+    // identical plan over identical data completes identical task and
+    // record counts, so these separate more work from slower work.
     val taskCnt = new java.util.concurrent.atomic.AtomicLong(0L)
     val recCnt = new java.util.concurrent.atomic.AtomicLong(0L)
-    // Memory-pressure axes (r19 verdict item 1): five driver rounds of
-    // minhash allocating ~1.5-1.7x committed at BYTE-IDENTICAL task/row
-    // volumes and cleared retry walls left exactly one untested
-    // hypothesis — execution-memory pressure (spill/fallback buffers)
-    // on that box. spillCnt = memory+disk bytes spilled (cumulative,
-    // windowed like tasks/in_rows); peakMem = max per-task
-    // peakExecutionMemory inside the window (NOT cumulative — it is
-    // reset at each window open, after the open-side quiesce, so a
-    // straggler from the previous query can never set this window's
-    // peak).
     val spillCnt = new java.util.concurrent.atomic.AtomicLong(0L)
     val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
@@ -627,19 +180,12 @@ object Bench {
           }
         }
       })
-    // Unquiesced-window marker (ADVICE r19): when the quiesce cap is
-    // exhausted the counters may still be moving, and straggler
-    // task-end events get charged to the adjacent window — exactly in
-    // the degraded-host runs where the "deterministic axis" claim
-    // matters most. The affected query names land in the file record's
-    // vol_dirty list (and stderr) so such a reading is never mistaken
-    // for an exact committed-level comparison.
-    val volDirtyNames = Seq.newBuilder[String]
-    var volUnquiesced = false
+    // Listener events post asynchronously: wait for two stable 10 ms
+    // reads (cap ~1 s), untimed — the seconds are already captured.
     def volumes(): (Long, Long, Long) = {
       var t = taskCnt.get(); var r = recCnt.get(); var s = spillCnt.get()
       var stable = 0; var spins = 0
-      while (stable < 2 && spins < 100) { // cap ~1 s; floor 20 ms
+      while (stable < 2 && spins < 100) {
         Thread.sleep(10L)
         val t1 = taskCnt.get(); val r1 = recCnt.get()
         val s1 = spillCnt.get()
@@ -647,57 +193,21 @@ object Bench {
         else { stable = 0; t = t1; r = r1; s = s1 }
         spins += 1
       }
-      volUnquiesced = stable < 2
-      if (volUnquiesced)
+      if (stable < 2)
         System.err.println("[bench] volume counters did not quiesce " +
-          "within the spin cap — the adjacent window's tasks/in_rows " +
-          "are NOT an exact reading")
+          "within the spin cap; the adjacent tasks/in_rows are approximate")
       (t, r, s)
     }
-    // The window-OPEN reading reuses the previous window's quiesced
-    // CLOSE reading unless a probe ran jobs in between (own-diff
-    // review, r19: an unconditional open-side quiesce costs a fixed
-    // ~2×20 ms × 117 materializations ≈ 5 s of dead wall per suite,
-    // and buys nothing when nothing ran since the close). A dirty
-    // FLAG, not a counter comparison: a probe's collect() returns
-    // before its last task-end events post, so "counters unchanged"
-    // could reuse a stale reading and charge the late events to the
-    // next query's window.
-    var lastVol: (Long, Long, Long) = (0L, 0L, 0L)
-    var volDirty = true
-    // the reused close reading may itself have been unquiesced — that
-    // taint carries into the next window's open side
-    var lastVolUnquiesced = false
+    // Each window opens on the previous window's quiesced close reading.
+    var lastVol = (0L, 0L, 0L)
 
-    // hoisted: SparkEntry.queries is a def that rebuilds the full map —
-    // calling it inside the timed window charged the rebuild to every
-    // query (microseconds, but the same pattern Verify hoists)
+    // hoisted: SparkEntry.queries rebuilds the full map on every call
     val queryFns = SparkEntry.queries
 
-    // queries that died mid-run (see renderTotalOnly's fails doc)
     var failCount = 0
     var lastFailed = false
-    // `window` attributes an unquiesced volume reading to the window
-    // that actually produced it (own-diff review r20): "timed" records
-    // the bare name (the file-record tasks/in_rows maps are at stake),
-    // "retry" records "name:retry" (only the hit's rt_tk/rt_rec are
-    // tainted — the timed fire-time reading stays exact), "warmup"
-    // records nothing (warmup volumes never enter the record; flagging
-    // them made a degraded warmup discard a cleanly-quiesced TIMED
-    // reading — the exact reading the marker exists to protect).
-    def materialize(name: String, window: String = "timed"): (Double,
-        Long, Long, Long, Long, Long, Long, Long) = {
-      // the volume window opens on a QUIESCED counter read — straggler
-      // task-end events from anything since the close must charge
-      // backwards, not to this query — reused from the previous close
-      // when no probe ran in between (the timed window needs no such
-      // guard — the clock starts after this read returns)
-      val (tk0, rec0, sp0) = if (volDirty) volumes() else lastVol
-      val openUnquiesced =
-        if (volDirty) volUnquiesced else lastVolUnquiesced
-      // peak is a window MAX, not a cumulative counter: reset after the
-      // open-side quiesce so a straggler from the previous query (or a
-      // probe's tasks) can never set this window's reading
+    def materialize(name: String): (Double, Work) = {
+      val (tk0, rec0, sp0) = lastVol
       peakMem.set(0L)
       val g0 = gcMillis()
       val io0 = ioReadBytes()
@@ -714,250 +224,89 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      // gc_ms / io_mb / alloc_mb = collector time, storage-layer reads,
-      // and thread-allocated bytes that landed INSIDE the timed
-      // window — read before the untimed inter-query System.gc() below,
-      // which must not be charged to the query it follows.
+      // read before the inter-query System.gc() below, which must not be
+      // charged to the query it follows
       val gcMs = gcMillis() - g0
       val ioMb = ioDelta(io0, ioReadBytes())
       val alMb = allocDelta(al0, allocBytes())
-      // quiesced close of the volume window (before the cache clear,
-      // whose unpersists run no tasks but keep the bus busy); the
-      // close reading becomes the next window's open unless a probe
-      // dirties it
       val (tk1, rec1, sp1) = volumes()
-      val pkMb = peakMem.get() / 1000000L
-      if (openUnquiesced || volUnquiesced) window match {
-        case "timed" => volDirtyNames += name
-        case "retry" => volDirtyNames += s"$name:retry"
-        case _ => // warmup: volumes unrecorded, taint nothing
-      }
       lastVol = (tk1, rec1, sp1)
-      lastVolUnquiesced = volUnquiesced
-      volDirty = false
-      // Queries persist shared subtrees; freeing them here keeps one
-      // query's cache from squeezing the next one's execution memory
-      // over a full-suite run (the bucketed-index tables are on disk and
-      // unaffected).
+      val work = Work(gcMs, ioMb, alMb, tk1 - tk0, rec1 - rec0,
+        (sp1 - sp0) / 1000000L, peakMem.get() / 1000000L)
+      // Queries persist shared subtrees; freeing them keeps one query's
+      // cache from squeezing the next one's execution memory.
       spark.catalog.clearCache()
-      // Untimed full GC between queries: 100+ queries of cache churn
-      // otherwise leave each timed run paying its predecessors' old-gen
-      // garbage — profiled r9 as decontaminate 4.8 s mid-suite vs 1.5 s
-      // isolated with identical plans. Collecting OUTSIDE the timed
-      // window measures each query's steady-state work.
+      // Untimed full GC: otherwise each timed run pays its predecessors'
+      // old-gen garbage (profiled: decontaminate 4.8 s mid-suite vs
+      // 1.5 s isolated with identical plans).
       System.gc()
-      (sec, gcMs, ioMb, alMb, tk1 - tk0, rec1 - rec0,
-        (sp1 - sp0) / 1000000L, pkMb)
+      (sec, work)
     }
 
-    // Fixed-shape scheduler-health probe (see scaladoc): median + max of
-    // five runs of a trivial shuffle chain. collect() of a 1-row
-    // aggregate, deliberately NOT a noop write, so the probe measures
-    // dispatch overhead and nothing else. Two shape pins keep artifacts
-    // comparable across configs: explicit partition counts everywhere
-    // (32 input slices, repartition(32, …) for the exchange — a groupBy
-    // would inherit spark.sql.shuffle.partitions and make a CPUS=4
-    // artifact's sched field incomparable with the CPUS=32 records),
-    // and one UNTIMED execution first so the probe's own whole-stage
-    // codegen/JIT first-touch doesn't land in pre_max and read as a
-    // storm (measured ~0.3-0.5 s cold vs ~0.03 s warm on a healthy
-    // box).
+    // Fixed-shape scheduler probe (see scaladoc): collect() of a 1-row
+    // aggregate over pinned partition counts (32 slices, an explicit
+    // repartition(32) exchange), so readings compare across CPUS values
+    // and measure dispatch overhead only. One untimed first run pays
+    // the probe's own codegen/JIT.
     val schedShape = spark.range(0, 1024, 1, 32)
       .repartition(32, col("id") % 7)
       .select(sum(col("id")))
     def schedProbe(): (Double, Double) = {
-      // probe jobs run tasks, so the next volume window must re-quiesce
-      // its open reading (see volDirty above). Dedup.warmupProbe's jobs
-      // are covered by the same flag: a schedProbe always runs between
-      // it and the first timed materialize.
-      volDirty = true
       val ts = (1 to 5).map { _ =>
         val t0 = System.nanoTime(); schedShape.collect()
         (System.nanoTime() - t0) / 1e9
       }.sorted
       (ts(2), ts.last)
     }
-    schedShape.collect() // untimed first-touch (codegen + JIT)
+    schedShape.collect()
 
-    // Untimed warmup: pays the one-off JIT/codegen/parquet-footer cost so
-    // the first timed query isn't a ~5s outlier. scan_bucketed_join's
-    // warmup also builds the session-cached bucketed tables (the index
-    // ingest), so its timed run below measures the exchange-free PROBE —
-    // build and probe are no longer conflated in one number.
-    materialize("scan_pruned", window = "warmup")
-    materialize("scan_bucketed_join", window = "warmup")
-    // sql_dml_lifecycle's warmup pays the catalog/metastore first-touch
-    // (Derby init on CREATE DATABASE) and the write-path codegen, which
-    // otherwise all land on whichever sql_* query runs first
-    // alphabetically and get misread as that query's cost.
-    materialize("sql_dml_lifecycle", window = "warmup")
-    // Text-pipeline first-touch (documents parquet footer + whole-stage
-    // codegen of the tokenize/explode/hash/aggregate stages; profiled
-    // 7.8 s cold vs 0.12 s warm at sf0.1) is paid by NEUTRAL probes over
-    // a 256-doc sample (Dedup.warmupProbe) — not by running a timed
-    // dedup_* query untimed first, which would make that one query's
-    // number uniquely steady-state.
+    // Untimed warmup of the one-off JIT/codegen/parquet-footer costs.
+    // scan_bucketed_join's warmup also builds the session-cached
+    // bucketed tables, so its timed run measures the exchange-free
+    // probe; sql_dml_lifecycle's pays the metastore first-touch that
+    // would otherwise land on the first sql_* query.
+    materialize("scan_pruned")
+    materialize("scan_bucketed_join")
+    materialize("sql_dml_lifecycle")
+    // Text-pipeline first-touch is paid by neutral probes over a
+    // 256-doc sample, not by running a timed dedup_* query untimed.
     try graft.operators.Dedup.warmupProbe(spark, sfDir)
-    catch { case e: Throwable =>
+    catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warmup probe failed: ${e.getMessage}")
     }
-    // ImageIO plugin-registry + PNG codec first-touch (real decode since
-    // r10) — pay it untimed, not inside multimodal_meta's timed run
+    // ImageIO plugin-registry + PNG codec first-touch
     try graft.operators.Multimodal.warmupCodec()
-    catch { case e: Throwable =>
+    catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] codec warmup failed: ${e.getMessage}")
     }
     spark.catalog.clearCache()
     val (preP50, preMax) = schedProbe()
+    // the probe's and warmups' task-end events charge backwards, not to
+    // the first timed query
+    lastVol = volumes()
 
     // Optional name filter for local profiling (comma-separated);
     // unset = the full suite, as the driver runs it.
     val names = SparkEntry.selectNames(sys.env.get("SPARK_GRAFT_ONLY"))
-    // Mid-suite host-health probes (r10 verdict item 2): the pre/post
-    // probes bracket the suite but cannot place a storm WITHIN it —
-    // adjudicating one outlier in r10 took three manual isolated runs.
-    // Every MidEvery queries, run the same fixed-shape probe UNTIMED
-    // (outside any query's measurement) and stream a short
-    // `{"sched_mid":...}` line between the per-query lines, so the
-    // artifact itself says which timing neighborhood was degraded.
-    // 7 lines × ~50 bytes on the 107-query suite — negligible tail cost.
-    val MidEvery = 15
-    val mids = Seq.newBuilder[(Int, Double, Double)]
-    // Outlier-triggered probes (r11 verdict item 2): the fixed 15-query
-    // cadence left a blind spot — stats_topk read 2.7x committed between
-    // two HEALTHY probes in r11 and the artifact could not say whether
-    // host or code. Trigger: >1.5x the committed comparator AND >0.2 s
-    // absolute excess — the ratio alone would fire on pure dispatch
-    // jitter for the ~40 sub-0.15 s queries (scan_dual 0.05 s -> 0.08 s
-    // is noise, not a storm), and each false fire costs a ~0.2 s probe
-    // plus a tail line. A real storm inflates by whole seconds and
-    // always clears both gates.
-    val hits = Seq.newBuilder[Hit]
-    // Arm the outlier trigger only in the comparator's own regime: a
-    // cpus=4 debug run or a different SF exceeds 1.5x on most heavy
-    // queries for legitimate reasons and would spray ~100 spurious
-    // probes and tail lines into the artifact.
-    val refArmed = sfDir.endsWith(BenchRef.sfDirSuffix) &&
-      cpus == BenchRef.cpus
-    // Sub-hit movers (r19 verdict item 2): a query reading >1.3x its
-    // committed comparator but under the 1.5x hit trigger used to get
-    // NO volume context — dedup_ngram_jaccard at 1.48x in r19 had to be
-    // adjudicated from five rounds of history instead of the
-    // deterministic axes built for exactly this. Record the fire-time
-    // volumes (alloc/tasks/in_rows/spill/peak — no probe, no retry:
-    // those stay the ≥1.5x hits' cost) in the file record and the
-    // probe-context tail line's spare slots.
-    val subs = Seq.newBuilder[SubHit]
-    val gcs = Seq.newBuilder[(String, Long)]
-    val ios = Seq.newBuilder[(String, Long)]
-    val als = Seq.newBuilder[(String, Long)]
-    val tks = Seq.newBuilder[(String, Long)]
-    val recs = Seq.newBuilder[(String, Long)]
-    val sps = Seq.newBuilder[(String, Long)]
-    val pks = Seq.newBuilder[(String, Long)]
-    val results = names.zipWithIndex.map { case (n, i) =>
-      val (sec, gcMs, ioMb, alMb, tk, rec, spMb, pkMb) = materialize(n)
-      gcs += ((n, gcMs))
-      ios += ((n, ioMb))
-      als += ((n, alMb))
-      tks += ((n, tk))
-      recs += ((n, rec))
-      sps += ((n, spMb))
-      pks += ((n, pkMb))
-      // a failed query's streamed line carries the marker so the
-      // time-until-failure can never read as a legitimate (fast) result
+    val timed = names.map { n =>
+      val (sec, work) = materialize(n)
+      // the marker keeps a time-until-failure from reading as a result
       println(s"""{"q":"$n","sec":${fmt(sec)}${
         if (lastFailed) ",\"fail\":1" else ""}}""")
-      (if (refArmed) BenchRef.committed.get(n) else None).foreach { ref =>
-        if (sec > ref * 1.5 && sec - ref > 0.2) {
-          val (p50, max) = schedProbe()
-          // rt/rtP50/rtGc stay sentinels; the post-suite re-run below
-          // fills them for the capped worst hits
-          hits += Hit(n, sec / ref, p50, max, gcMs, ioMb, alMb, tk, rec,
-            sp = spMb, pk = pkMb)
-          println(renderSchedHit(n, sec / ref, p50, max, gcMs, ioMb,
-            alMb, tk, rec, spMb, pkMb))
-        } else if (sec > ref * 1.3 && sec - ref > 0.1) {
-          // the >1.3x mover convention (BASELINE.md): same absolute
-          // floor rationale as the hit trigger, scaled — 0.1 s keeps
-          // dispatch jitter on the ~40 sub-0.15 s queries from
-          // spraying sub entries
-          subs += SubHit(n, sec / ref, alMb, tk, rec, spMb, pkMb)
-          println(renderSubHit(n, sec / ref, alMb, tk, rec, spMb, pkMb))
-        }
-      }
-      if ((i + 1) % MidEvery == 0 && i + 1 < names.size) {
-        val (p50, max) = schedProbe()
-        mids += ((i + 1, p50, max))
-        println(s"""{"sched_mid":${fmt(p50)},"max":${fmt(max)},"after":${i + 1}}""")
-      }
-      n -> sec
+      (n, sec, work)
     }
+    val results = timed.map(t => t._1 -> t._2)
     val (postP50, postMax) = schedProbe()
     val sched = schedJson(preP50, preMax, postP50, postMax)
-    // materialize the builders ONCE: the Builder contract declares
-    // contents undefined after result(), and both the file record and
-    // the probe-context line consume them
-    val midsV = mids.result()
-    val hits0 = hits.result()
-    // In-artifact re-run signal (r15 verdict item 1): every sched_hit
-    // whose probe/gc/io axes all read healthy lands on "presumptive
-    // code" — but three rounds running (r13 decontaminate 1.7x, r14
-    // minhash 1.7x, r15 decontaminate 2.4x) the evidence showed a
-    // driver-box query-local window instead, each adjudicated with a
-    // round-trip of manual isolated re-runs. Re-run each hit query ONCE
-    // after the suite (untimed territory — the total and post probe are
-    // already recorded; seconds of cost, capped at the probe-context
-    // cap) and carry the re-read in the hit record: a code cause
-    // reproduces its ratio in-artifact, a window does not. The suite's
-    // fails count is snapshotted FIRST so a failing re-run (-2) can
-    // never poison the committed record's fails field.
-    val suiteFails = failCount
-    val retried = hits0.sortBy(-_.r).take(MaxHits).map { h =>
-      // retry-time context (r16 verdict item 1): a FRESH host probe
-      // immediately before the re-run, and the collector ms inside the
-      // re-run's own window — without them, a degraded window that
-      // outlives the suite makes an elevated rt read as "code
-      // reproduces" (BENCH_r16 under-cleared 4 of 6 capped hits)
-      val (rtP50, _) = schedProbe()
-      val (sec, rtGc, _, rtAl, rtTk, rtRec, rtSp, rtPk) =
-        materialize(h.q, window = "retry")
-      System.err.println(s"[bench] retry ${h.q}: ${fmt(sec)}s" +
-        s" (probe ${fmt(rtP50)}, gc ${rtGc}ms, al ${rtAl}MB," +
-        s" tk $rtTk, rec $rtRec, sp ${rtSp}MB, pk ${rtPk}MB)" +
-        (if (lastFailed) " (failed)" else ""))
-      h.q -> ((if (lastFailed) -2.0 else sec, rtP50, rtGc, rtAl, rtTk,
-        rtRec, rtSp, rtPk))
-    }.toMap
-    val hitsV = hits0.map(h => retried.get(h.q).fold(h) {
-      case (rt, p, g, a, t, rr, sp, pk) => h.copy(rt = rt, rtP50 = p,
-        rtGc = g, rtAl = a, rtTk = t, rtRec = rr, rtSp = sp, rtPk = pk) })
-    val subsV = subs.result()
-    val line = renderFullRecord(results, sched, sfDir, midsV,
-      hitsV, gcs.result(), ios.result(), als.result(), tks.result(),
-      recs.result(), suiteFails, refArmed, cpus, sps.result(),
-      pks.result(), subsV, volDirtyNames.result())
-    // The ~1.9 KB NAMED per-query map line goes to the FILE ONLY: in r9
-    // it consumed most of the driver's bounded stdout tail and pushed 23
-    // of the 107 short per-query lines out of the window. The positional
-    // block below (~970 bytes for 107 queries) is what carries ALL
-    // per-query points through the 2000-byte tail; the streamed named
-    // lines that survive behind it cross-check its ordering.
-    renderQvLines(results).foreach(println)
-    // probe context INSIDE the tail-surviving block (r12 verdict item 1):
-    // the streamed probe lines above are cut for the suite's first ~80
-    // queries, so early-suite outliers could not self-adjudicate from
-    // the artifact — this line replays every mid probe and the worst
-    // triggered hits compactly next to the total.
-    println(renderProbeContext(midsV, hitsV, subsV))
-    val totalOnly = renderTotalOnly(results, sched, sfDir, suiteFails, refArmed)
-    println(totalOnly)
+    println(renderTotal(results, sched, sfDir, failCount))
     try {
       val outFile = new java.io.File(benchOut)
       Option(outFile.getParentFile).foreach(_.mkdirs())
       val w = new java.io.PrintWriter(outFile, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case e: Throwable =>
+      try w.println(renderFullRecord(results,
+        timed.map(t => t._1 -> t._3), sched, sfDir, failCount, cpus))
+      finally w.close()
+    } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $benchOut: ${e.getMessage}")
     }
     spark.stop()

@@ -1,14 +1,17 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the stdout/file JSON contract the driver parses. The driver
-  * captures a bounded tail of Bench stdout and `json.load`s the LAST
-  * line, then reads `metric`/`value` (and, since r10, the `sched`
-  * host-health probe); the file record additionally carries the
-  * per-query map. A malformed line silently zeroes the round's bench
-  * artifact, so the rendering is pinned here as PARSEABLE json with
-  * the exact expected keys — not just eyeballed.
+import scala.jdk.CollectionConverters._
+
+/** Pins the stdout/file JSON contract of Bench. Its caller keeps a
+  * bounded tail of Bench stdout and `json.load`s the LAST line, then
+  * reads `metric`/`value`, the `sched` host-health probe and the
+  * `queries` map; the file record additionally carries every query's
+  * seconds and counted work. A malformed line silently
+  * zeroes the bench artifact, so the rendering is pinned here as
+  * PARSEABLE json with the exact expected keys — not just eyeballed.
   */
 class BenchFormatSpec extends AnyFunSuite {
 
@@ -16,22 +19,22 @@ class BenchFormatSpec extends AnyFunSuite {
     "dedup_exact" -> 12.3449)
   private val sched = Bench.schedJson(0.033, 0.339, 0.042, 0.363)
 
-  // Minimal JSON object checks without a parser dependency: balanced
-  // braces, the expected key:value fragments, and no locale commas.
+  // Minimal JSON object checks: balanced braces, the expected key:value
+  // fragments, and no locale commas.
   private def assertFragments(line: String, frags: Seq[String]): Unit = {
     assert(line.count(_ == '{') == line.count(_ == '}'), line)
     assert(line.head == '{' && line.last == '}', line)
     frags.foreach(f => assert(line.contains(f), s"missing `$f` in $line"))
   }
 
+  private def parse(line: String): JsonNode = new ObjectMapper().readTree(line)
+
   test("total-only line: keys, rounding, and count") {
-    val line = Bench.renderTotalOnly(results, sched, "/data/sf0.1")
-    // fails/armed (r14): a mid-run query failure and a disarmed outlier
-    // trigger must both be visible from the tail's last line alone
-    assertFragments(line, Seq("\"fails\":0", "\"armed\":true"))
-    assertFragments(
-      Bench.renderTotalOnly(results, sched, "/d", fails = 2, armed = false),
-      Seq("\"fails\":2", "\"armed\":false"))
+    val line = Bench.renderTotal(results, sched, "/data/sf0.1")
+    // a mid-run query failure must be visible from the last line alone
+    assertFragments(line, Seq("\"fails\":0"))
+    assertFragments(Bench.renderTotal(results, sched, "/d", fails = 2),
+      Seq("\"fails\":2"))
     assertFragments(line, Seq(
       "\"metric\":\"total\"",
       // 1.2345 + 0.0 + 12.3449 = 13.5794 → %.3f half-up
@@ -39,484 +42,77 @@ class BenchFormatSpec extends AnyFunSuite {
       "\"unit\":\"sec\"",
       "\"n\":3",
       "\"sched\":{\"pre_p50\":0.033,\"pre_max\":0.339,\"post_p50\":0.042,\"post_max\":0.363}",
-      "\"sf\":\"/data/sf0.1\""))
-    assert(!line.contains("queries"), "total-only must stay ~160 bytes")
-    assert(line.length < 250, s"total-only line too long: ${line.length}")
+      "\"sf\":\"/data/sf0.1\"",
+      // a short suite fits whole, heaviest first
+      "\"queries\":{\"dedup_exact\":12.345,\"q1_agg\":1.235,\"scan_pruned\":0.000}"))
   }
 
   test("full file record: per-query map with formatted seconds") {
-    val line = Bench.renderFullRecord(results, sched, "/data/sf0.1")
+    val work = results.zipWithIndex.map { case ((n, _), i) =>
+      n -> Bench.Work(gcMs = 17L + i, ioMb = -1L, allocMb = 678L,
+        tasks = 1234L, inRows = 7999999999L, spillMb = 0L, peakMb = 4321L)
+    }
+    val line = Bench.renderFullRecord(results, work, sched, "/data/sf0.1",
+      fails = 1, cpus = "32")
     assertFragments(line, Seq(
       "\"queries\":{\"q1_agg\":1.235,\"scan_pruned\":0.000,\"dedup_exact\":12.345}",
-      "\"metric\":\"total\"", "\"sched\":",
-      // no mid probes passed → an empty but still-parseable array
-      "\"sched_mid\":[]"))
-  }
-
-  test("mid-suite probe fragments: streamed line shape and file array") {
-    val mids = Seq((15, 0.033, 0.051), (30, 0.106, 0.15))
-    assert(Bench.midJson(mids) ==
-      "\"sched_mid\":[{\"after\":15,\"p50\":0.033,\"max\":0.051}," +
-        "{\"after\":30,\"p50\":0.106,\"max\":0.150}]")
-    val line = Bench.renderFullRecord(results, sched, "/d", mids)
-    assertFragments(line, Seq(
-      "\"sched_mid\":[{\"after\":15,\"p50\":0.033,\"max\":0.051}"))
-    // the streamed stdout twin must stay well under the per-query lines'
-    // length budget (the whole point is not to ration the bounded tail)
-    val streamed = s"""{"sched_mid":${Bench.fmt(0.033)},"max":${Bench.fmt(0.051)},"after":15}"""
-    assert(streamed.length < 60, streamed)
-    assertFragments(streamed, Seq("\"sched_mid\":0.033", "\"after\":15"))
-  }
-
-  test("positional qv block: header, chunking, order, and shape") {
-    val rs = (1 to 85).map(i => s"q$i" -> i / 100.0)
-    val lines = Bench.renderQvLines(rs, chunk = 40)
-    // header + ceil(85/40) = 3 chunks
-    assert(lines.size == 4, lines.mkString("\n"))
-    assertFragments(lines.head,
-      Seq("\"qn\":85", "\"ord\":\"alpha\"", "\"unit\":\"sec\""))
-    lines.tail.zipWithIndex.foreach { case (l, k) =>
-      assertFragments(l, Seq(s"""{"qv":$k,"t":[""")) }
-    // concatenated arrays reproduce the per-query values in suite order
-    val vals = lines.tail.flatMap(l =>
-      l.substring(l.indexOf('[') + 1, l.lastIndexOf(']'))
-        .split(',').toSeq)
-    assert(vals == rs.map(r => Bench.fmt(r._2)),
-      s"positional vector diverged: ${vals.take(5)}")
-    assert(lines.tail.take(2).forall(_.length < 600),
-      "full chunks must stay far under the 1.9 KB line-truncation limit")
-  }
-
-  test("probe-context line: sm order, hit cap, true count, and size") {
-    val mids = Seq((15, 0.014, 0.03), (30, 0.015, 0.04), (45, 1.234, 2.0))
-    // gc_ms is the fourth adjudication value (r13 verdict item 1): the
-    // decontaminate entry here reproduces that round's real ambiguity —
-    // healthy probe p50, but 1843 ms of collector time inside a 2.5 s
-    // query window says JVM pressure, not code
-    val hits = Seq(
-      Bench.Hit("decontaminate", 2.25, 0.022, 0.05, 1843L, 41L, 912L,
-        tk = 412L, rec = 1800111L, sp = 0L, pk = 341L,
-        rt = 1.512, rtP50 = 0.024, rtGc = 210L, rtAl = 934L,
-        rtTk = 412L, rtRec = 1800111L, rtSp = 0L, rtPk = 339L),
-      Bench.Hit("ngram_novelty", 1.58, 0.018, 0.04, 12L, 3L, 77L,
-        tk = 377L, rec = 905000L, sp = 0L, pk = 64L),
-      Bench.Hit("dedup_minhash_lsh", 1.55, 0.020, 0.05, 7L, 5123L, 2048L,
-        tk = 1930L, rec = 5100000L, sp = 2311L, pk = 1104L,
-        rt = -2.0, rtP50 = 0.019, rtGc = 3L, rtAl = 1988L,
-        rtTk = 433L, rtRec = 120000L, rtSp = 0L, rtPk = 512L))
-    val line = Bench.renderProbeContext(mids, hits)
-    // sm carries every mid probe p50 in cadence order — a storm window
-    // is visible at its position (the 1.234 third entry here)
-    assertFragments(line, Seq(
-      "\"sm\":[0.014,0.015,1.234]", "\"hn\":3",
-      // hits sorted worst-first by ratio
-      // io_mb is the fifth entry (r14 verdict item 1): the
-      // dedup_minhash_lsh shape here is the real r14 ambiguity —
-      // healthy probe, healthy gc, but 5 GB of storage-layer reads
-      // inside the window says I/O pressure, not code.
-      // alloc_mb is the sixth (r16 verdict item 3): the decontaminate
-      // shape carries 912 MB allocated next to its 1843 ms of gc — if
-      // the committed alloc is also ~900 the gc is a slower COLLECTOR
-      // (host), if committed were ~90 the query allocated 10x (code).
-      // tasks/in_rows are the seventh/eighth entries (r18 verdict
-      // item 3): the DETERMINISTIC volume axes — decontaminate's 412
-      // tasks / 1.8M input rows next to the committed maps say whether
-      // the window ran MORE WORK (counts multiply under recompute) or
-      // the same work slower (counts identical, the alloc-drift case
-      // the r18 round could not settle from alloc_mb alone).
-      // spill_mb/peak_mb are the ninth/tenth (r19 verdict item 1) —
-      // the MEMORY-PRESSURE axes: the minhash shape here carries
-      // 2311 MB spilled and an 1104 MB per-task peak next to its
-      // inflated alloc — the "execution-memory pressure forces spill
-      // buffers" signature five rounds of the first seven axes could
-      // not test; decontaminate's sp 0 / flat pk says the opposite.
-      // The retry entry is last (r15 item 1 + r16 item 1 + r17 item 3 +
-      // r18 item 3 + r19 item 1): -1 beyond the cap, else
-      // [rt, rt_p50, rt_gc, rt_al, rt_tk, rt_rec, rt_sp, rt_pk] —
-      // decontaminate's 1.512 s re-run lands next to ITS OWN healthy
-      // 0.024 probe AND its 934 MB re-run allocation and IDENTICAL
-      // 412/1.8M re-run volumes (the deterministic axes saying the
-      // re-run did the same work), so this "window, not code" call is
-      // in-artifact even when the window outlives the suite; a failed
-      // re-run keeps its context (-2 with the probe/gc/alloc/volumes
-      // that watched it fail).
-      """["decontaminate",2.3,0.022,1843,41,912,412,1800111,0,341,[1.512,0.024,210,934,412,1800111,0,339]],["ngram_novelty",1.6,0.018,12,3,77,377,905000,0,64,-1],["dedup_minhash_lsh",1.6,0.020,7,5123,2048,1930,5100000,2311,1104,[-2,0.019,3,1988,433,120000,0,512]]"""))
-    // no sub-hits passed: true count 0 next to an empty-but-parseable
-    // array
-    assertFragments(line, Seq("\"sn\":0", "\"sub\":[]"))
-    // the cap keeps a pathological run from eating the tail; hn still
-    // records the TRUE count so the cap is never a silent truncation.
-    // Volumes here sit AT the tail clamp (tk 6 digits, rec 9 digits,
-    // gc/io/al/sp/pk 5 digits — the exact values above the clamp live
-    // in the file record), so this doubles as the worst-entry-width
-    // witness.
-    val many = (1 to 20).map(i => Bench.Hit(s"query_with_a_long_name_$i",
-      1.5 + i / 10.0, 0.02, 0.05, 777777L, 777777L, 777777L,
-      tk = 7777777L, rec = 7999999999L, sp = 777777L, pk = 777777L,
-      rt = 12.345, rtP50 = 0.021, rtGc = 777777L, rtAl = 777777L,
-      rtTk = 7777777L, rtRec = 7999999999L, rtSp = 777777L,
-      rtPk = 777777L))
-    val capped = Bench.renderProbeContext(mids, many)
-    assert(capped.contains("\"hn\":20"), capped)
-    // the above-clamp values render clamped in the tail line...
-    assert(capped.contains(",999999,999999999,"), capped)
-    assert(capped.contains(",99999,"), capped)
-    assert(!capped.contains("777777"),
-      s"tail volume clamp not applied: $capped")
-    // ...while sentinels pass through the clamp untouched
-    assert(Bench.clampVol(-1L, 999999L) == -1L)
-    assert(Bench.clampVol(-2L, 999999L) == -2L)
-    // sm + hits array + 5 entries + each entry's retry-context array +
-    // the over array + the (empty) sub array
-    assert(capped.count(_ == '[') == 1 + 1 + 5 + 5 + 1 + 1,
-      s"hit cap not applied: $capped")
-    // overflow names (r20 verdict item 7): the 6th+ hits' IDENTITIES
-    // survive the cap as a names-only list — 3 clamped names, so a
-    // 20-hit storm still says which queries sat just past the cap
-    // (entries are ratio-sorted DESC, so the overflow names are hits
-    // 6-8 — i = 15, 14, 13 — each clamped to 20 chars, which here cuts
-    // the distinguishing suffix: the clamp bounds bytes, the file
-    // record keeps full names)
-    assertFragments(capped, Seq(""""over":["query_with_a_long_na","query_with_a_long_na","query_with_a_long_na"]"""))
-    assert(capped.length < 1040, s"capped probe line too long: ${capped.length}")
-    // healthy run: empty hits, still parseable
-    assertFragments(Bench.renderProbeContext(mids, Nil),
-      Seq("\"hn\":0", "\"hits\":[]", "\"over\":[]", "\"sn\":0", "\"sub\":[]"))
-    // sub-hit entries (r19 verdict item 2) fill ONLY the slots the
-    // hits left: with 20 hits saturating the cap, none of the subs
-    // appear, but sn still records the true count...
-    val subs = Seq(
-      Bench.SubHit("dedup_ngram_jaccard", 1.48, 4123L, 650L, 10800L,
-        0L, 890L),
-      Bench.SubHit("dedup_passage", 1.31, 512L, 96L, 41000L, 0L, 77L))
-    val full = Bench.renderProbeContext(mids, many, subs)
-    assert(full.contains("\"sn\":2") && full.contains("\"sub\":[]"), full)
-    // ...and with one hit, the spare slots carry the movers' volumes:
-    // [q, ratio, alloc_mb, tasks, in_rows, spill_mb, peak_mb]
-    val spare = Bench.renderProbeContext(mids, hits.take(1), subs)
-    assertFragments(spare, Seq("\"hn\":1", "\"sn\":2",
-      """"sub":[["dedup_ngram_jaccard",1.5,4123,650,10800,0,890],["dedup_passage",1.3,512,96,41000,0,77]]"""))
-  }
-
-  test("full-suite positional block + total fit the driver's 2000-byte tail") {
-    // The real contract this round exists for: the BENCH_r9-r11
-    // artifacts each captured EXACTLY 2000 tail bytes, and the named
-    // map (~2.4 KB minimum for 107 entries) cannot fit next to the
-    // total line. Render the block for the real 107-query suite with
-    // the committed comparator values (the realistic digit widths) plus
-    // a WORST-CASE probe-context line (7 storm-inflated mids + the hit
-    // cap saturated with the longest query names, every axis and the
-    // retry context at max digit width) and assert the end-of-suite
-    // block leaves headroom: block + probes + total <= 1850 bytes, so
-    // ~150 bytes (~5 named lines) survive to cross-check the
-    // positional order even when every probe fires at storm
-    // magnitudes. (A healthy run's probe line is ~60 bytes, not ~700,
-    // so the usual margin stays ~500; the realistic-shape e2e test
-    // below pins >= 10 named lines.)
-    val rs = BenchRef.committed.toSeq.sortBy(_._1)
-    assert(rs.size >= 100, "comparator map lost its suite")
-    val sched = Bench.schedJson(0.02, 0.047, 0.013, 0.029)
-    // worst-case probe context: all 7 mid probes inflated to 4 digits,
-    // the hit cap saturated with the suite's longest query names
-    val longest = rs.map(_._1).sortBy(-_.length)
-    val worstMids = (1 to 7).map(i => (i * 15, 12.345, 99.999))
-    // worst-case values: every axis AT its tail clamp (gc/io/al/sp/pk
-    // 5 digits, tasks 6, in_rows 9 — the clamps in renderProbeContext
-    // make these widths deterministic, the reason they exist),
-    // fire-time and retry both; worst-case retry: a 2-digit-seconds
-    // re-run (the heaviest queries run ~8 s) carrying a storm-inflated
-    // probe. Above-clamp inputs prove the clamp is what bounds the
-    // width. Plus 20 unrendered sub-hits — the worst case is all-hits
-    // (a sub entry is ~half a hit entry and only fills SPARE slots),
-    // but sn's digits still cost bytes.
-    val worstHits = longest.take(8).map(n =>
-      Bench.Hit(n, 12.3, 12.345, 99.999, 7777777L, 7777777L, 7777777L,
-        tk = 7777777L, rec = 7999999999L, sp = 7777777L, pk = 7777777L,
-        rt = 99.999, rtP50 = 12.345, rtGc = 7777777L, rtAl = 7777777L,
-        rtTk = 7777777L, rtRec = 7999999999L, rtSp = 7777777L,
-        rtPk = 7777777L))
-    val worstSubs = (1 to 20).map(i =>
-      Bench.SubHit(longest(i % 8), 1.4, 7777777L, 7777777L, 7999999999L,
-        7777777L, 7777777L))
-    val block = Bench.renderQvLines(rs).map(_ + "\n").mkString +
-      Bench.renderProbeContext(worstMids, worstHits, worstSubs) + "\n" +
-      Bench.renderTotalOnly(rs, sched, "/root/testdata/sf0.1") + "\n"
-    // 1850 → 1985 in r19 (two volume axes) → 2000 in r20: the two
-    // memory-pressure axes and the sub slots cost ~220 bytes at the
-    // saturated-storm cap, funded by MaxHits 6 → 5 and the 5-digit
-    // gc/io/al tail clamps. The hard contract is block <= 2000 (the
-    // positional vector + probe context + total always survive the
-    // tail COMPLETE — each is printed after every named line, so the
-    // last 2000 bytes always start at or before the block when the
-    // block itself fits); the named cross-check lines are sacrificed
-    // only in this all-axes-at-max scenario — the realistic-shape e2e
-    // test below still pins >= 10 of them on a storm-free run.
-    assert(block.length <= 2000,
-      s"end-of-suite block grew to ${block.length} bytes — past 2000 the " +
-        "tail starts cutting the positional vector itself")
-  }
-
-  test("the last 2000 stdout bytes reconstruct all 107 per-query points") {
-    // End-to-end simulation of the driver's capture: build the FULL
-    // realistic stdout stream (107 streamed named lines, 7 sched_mid
-    // lines, the positional block, the total), keep only the LAST 2000
-    // bytes as the driver does, and assert the artifact contract —
-    // every per-query value recoverable, total line intact and last,
-    // and enough named lines left to cross-check the positional order.
-    val rs = BenchRef.committed.toSeq.sortBy(_._1)
-    val sched = Bench.schedJson(0.02, 0.047, 0.013, 0.029)
-    val stdout = new StringBuilder
-    // realistic probe story: 7 cadence mids, plus three early-suite
-    // outlier hits (the r12 scenario — all fired in the cut head)
-    val mids = Seq.newBuilder[(Int, Double, Double)]
-    val hits = Seq(
-      Bench.Hit("decontaminate", 2.25, 0.022, 0.05, 1843L, 41L, 912L,
-        tk = 412L, rec = 1800111L, sp = 0L, pk = 341L,
-        rt = 1.512, rtP50 = 0.024, rtGc = 210L, rtAl = 934L,
-        rtTk = 412L, rtRec = 1800111L, rtSp = 0L, rtPk = 339L),
-      Bench.Hit("dedup_minhash_lsh", 1.55, 0.020, 0.05, 7L, 5123L, 2048L,
-        tk = 1930L, rec = 5100000L, sp = 2311L, pk = 1104L,
-        rt = 5.601, rtP50 = 0.021, rtGc = 188L, rtAl = 2113L,
-        rtTk = 1930L, rtRec = 5100000L, rtSp = 0L, rtPk = 512L),
-      Bench.Hit("ngram_novelty", 1.58, 0.018, 0.04, 12L, 3L, 77L,
-        tk = 377L, rec = 905000L, sp = 0L, pk = 64L,
-        rt = 0.913, rtP50 = 0.019, rtGc = 9L, rtAl = 81L,
-        rtTk = 377L, rtRec = 905000L, rtSp = 0L, rtPk = 66L))
-    // one sub-hit mover (the r19 dedup_ngram_jaccard scenario): its
-    // streamed line also fires in the cut head, so the probe-context
-    // spare slots are what carry its volumes through the tail
-    val subs = Seq(Bench.SubHit("dedup_ngram_jaccard", 1.48, 4123L,
-      650L, 10800L, 0L, 890L))
-    rs.zipWithIndex.foreach { case ((n, v), i) =>
-      stdout ++= s"""{"q":"$n","sec":${Bench.fmt(v)}}""" + "\n"
-      // the streamed hit line fires BEFORE the post-suite re-run
-      // exists, so it carries no rt — only the probe-context line does
-      hits.find(_.q == n).foreach { h =>
-        stdout ++= Bench.renderSchedHit(h.q, h.r, h.p50, h.max, h.gc,
-          h.io, h.al, h.tk, h.rec, h.sp, h.pk) + "\n" }
-      subs.find(_.q == n).foreach { s2 =>
-        stdout ++= Bench.renderSubHit(s2.q, s2.r, s2.al, s2.tk, s2.rec,
-          s2.sp, s2.pk) + "\n" }
-      if ((i + 1) % 15 == 0 && i + 1 < rs.size) {
-        mids += ((i + 1, 0.016, 0.053))
-        stdout ++= s"""{"sched_mid":0.016,"max":0.053,"after":${i + 1}}""" + "\n"
-      }
+      "\"metric\":\"total\"", "\"fails\":1", "\"cpus\":\"32\"", "\"sched\":",
+      "\"gc_ms\":{\"q1_agg\":17,\"scan_pruned\":18,\"dedup_exact\":19}",
+      "\"io_mb\":{\"q1_agg\":-1,", "\"in_rows\":{\"q1_agg\":7999999999,"))
+    val json = parse(line)
+    Bench.Work.keys.foreach { k =>
+      assert(json.get(k).fieldNames.asScala.toSeq == results.map(_._1),
+        s"$k map does not cover the suite in order")
     }
-    Bench.renderQvLines(rs).foreach(l => stdout ++= l + "\n")
-    val probeCtx = Bench.renderProbeContext(mids.result(), hits, subs)
-    stdout ++= probeCtx + "\n"
-    val total = Bench.renderTotalOnly(rs, sched, "/root/testdata/sf0.1")
-    stdout ++= total + "\n"
-    val tail = stdout.takeRight(2000).toString
-    val lines = tail.linesIterator.toSeq
-    // the total must be the last line, untruncated
-    assert(lines.last == total, s"total lost: ${lines.last.take(80)}")
-    // the positional block must be complete inside the tail
-    val header = lines.find(_.startsWith("{\"qn\":"))
-    assert(header.contains(s"""{"qn":${rs.size},"ord":"alpha","unit":"sec"}"""),
-      s"qv header lost from the tail: $header")
-    val vals = lines.filter(_.startsWith("{\"qv\":")).flatMap(l =>
-      l.substring(l.indexOf('[') + 1, l.lastIndexOf(']')).split(','))
-    assert(vals.size == rs.size,
-      s"only ${vals.size}/${rs.size} per-query points survive the tail")
-    assert(vals == rs.map(r => Bench.fmt(r._2)),
-      "positional values diverged from the suite results")
-    // the probe-context line must survive the tail intact — this IS the
-    // r12 verdict item: the streamed hit lines for these three
-    // early-suite movers are all in the cut head, and without this line
-    // the artifact cannot adjudicate them
-    assert(lines.contains(probeCtx), s"probe context lost from the tail")
-    assert(probeCtx.contains("\"hn\":3") &&
-      probeCtx.contains("\"decontaminate\"") &&
-      probeCtx.contains("\"ngram_novelty\"") &&
-      probeCtx.contains("\"dedup_minhash_lsh\""), probeCtx)
-    // the sub-hit mover's volumes ride the spare slots through the
-    // tail (r19 verdict item 2 — the jaccard adjudication gap)
-    assert(probeCtx.contains("\"sn\":1") &&
-      probeCtx.contains("[\"dedup_ngram_jaccard\",1.5,4123,650,10800,0,890]"),
-      probeCtx)
-    // while the streamed early-suite hit lines themselves are indeed cut
-    // (the scenario the context line exists for)
-    assert(!lines.exists(_.startsWith("{\"sched_hit\"")),
-      "simulation no longer reproduces the cut-head scenario")
-    assert(!lines.exists(_.startsWith("{\"sub_hit\"")),
-      "simulation no longer reproduces the cut-head scenario (sub)")
-    // and the named cross-check lines: at least the last ~10 queries'
-    // streamed lines must also fit behind the block
-    val named = lines.count(_.startsWith("{\"q\":"))
-    assert(named >= 10, s"only $named named lines left for cross-checking")
+    assert(json.get("peak_mb").get("dedup_exact").asLong == 4321L)
+    // an empty suite: empty but still-parseable maps
+    val bare = Bench.renderFullRecord(Nil, Nil, sched, "/d", 0, "4")
+    Bench.Work.keys.foreach(k => assert(bare.contains(s""""$k":{}"""), bare))
+    parse(bare)
   }
 
-  test("sched_hit: streamed line and file array shapes") {
-    val streamed = Bench.renderSchedHit("stats_topk", 2.7341, 0.018,
-      0.051, 412L, 73L, 512L, 207L, 1355000L, 0L, 233L)
-    assertFragments(streamed, Seq("\"sched_hit\":0.018", "\"max\":0.051",
-      "\"q\":\"stats_topk\"", "\"r\":2.7", "\"gc\":412", "\"io\":73",
-      "\"al\":512", "\"tk\":207", "\"rec\":1355000", "\"sp\":0",
-      "\"pk\":233"))
-    assert(streamed.length < 155, streamed)
-    // the streamed sub-hit twin (r19 verdict item 2): volumes only
-    val subStreamed = Bench.renderSubHit("dedup_ngram_jaccard", 1.48,
-      4123L, 650L, 10800L, 0L, 890L)
-    assertFragments(subStreamed, Seq("\"sub_hit\":\"dedup_ngram_jaccard\"",
-      "\"r\":1.5", "\"al\":4123", "\"tk\":650", "\"rec\":10800",
-      "\"sp\":0", "\"pk\":890"))
-    assert(subStreamed.length < 110, subStreamed)
-    assert(Bench.hitsJson(Seq(Bench.Hit("stats_topk", 2.7341, 0.018,
-      0.051, 412L, 73L, 512L, tk = 207L, rec = 1355000L,
-      rt = 1.207, rtP50 = 0.02, rtGc = 31L,
-      rtAl = 498L, rtTk = 207L, rtRec = 1355000L, sp = 0L, pk = 233L,
-      rtSp = 0L, rtPk = 230L))) ==
-      """"sched_hit":[{"q":"stats_topk","r":2.7,"p50":0.018,"max":0.051,"gc":412,"io":73,"al":512,"tk":207,"rec":1355000,"sp":0,"pk":233,"rt":1.207,"rt_p50":0.020,"rt_gc":31,"rt_al":498,"rt_tk":207,"rt_rec":1355000,"rt_sp":0,"rt_pk":230}]""")
-    // sub-hit file entries: full fidelity, unclamped
-    assert(Bench.subsJson(Seq(Bench.SubHit("dedup_ngram_jaccard", 1.48,
-      4123L, 650L, 10800L, 0L, 890L))) ==
-      """"sub_hits":[{"q":"dedup_ngram_jaccard","r":1.5,"al":4123,"tk":650,"rec":10800,"sp":0,"pk":890}]""")
-    // retry sentinels render as bare ints, never as a fake duration;
-    // an un-retried hit has no context (-1 everywhere), a FAILED retry
-    // keeps its real probe/gc/alloc/volume context next to the -2
-    val unretried =
-      Bench.hitsJson(Seq(Bench.Hit("a", 1.6, 0.01, 0.02, 1L, 0L, 9L)))
-    Seq("\"rt\":-1", "\"rt_p50\":-1", "\"rt_gc\":-1", "\"rt_al\":-1",
-      "\"rt_tk\":-1", "\"rt_rec\":-1", "\"rt_sp\":-1", "\"rt_pk\":-1")
-      .foreach(f => assert(unretried.contains(f), s"missing `$f` in $unretried"))
-    val failedRetry =
-      Bench.hitsJson(Seq(Bench.Hit("a", 1.6, 0.01, 0.02, 1L, 0L, 9L,
-        tk = 88L, rec = 4096L, sp = 3L, pk = 21L,
-        rt = -2.0, rtP50 = 0.019, rtGc = 3L, rtAl = 11L,
-        rtTk = 12L, rtRec = 512L, rtSp = 0L, rtPk = 19L)))
-    Seq("\"rt\":-2", "\"rt_p50\":0.019", "\"rt_gc\":3", "\"rt_al\":11",
-      "\"tk\":88", "\"rec\":4096", "\"rt_tk\":12", "\"rt_rec\":512",
-      "\"sp\":3", "\"pk\":21", "\"rt_sp\":0", "\"rt_pk\":19")
-      .foreach(f => assert(failedRetry.contains(f), s"missing `$f` in $failedRetry"))
-    // no hits → empty but still-parseable structures in the file record
-    val line = Bench.renderFullRecord(results, sched, "/d")
-    assertFragments(line, Seq("\"sched_hit\":[]", "\"gc_ms\":{}",
-      "\"io_mb\":{}", "\"alloc_mb\":{}", "\"tasks\":{}", "\"in_rows\":{}",
-      "\"spill_mb\":{}", "\"peak_mb\":{}", "\"sub_hits\":[]",
-      "\"vol_dirty\":[]"))
-    // the per-query gc map makes sub-hit movers adjudicable from a
-    // committed record; it must follow the queries map so the
-    // comparator-pin parser's first-} scan still isolates queries
-    val withGc = Bench.renderFullRecord(results, sched, "/d",
-      gcs = results.map { case (n, _) => n -> 17L })
-    assertFragments(withGc, results.map { case (n, _) => s"""\"$n\":17""" })
-    assert(withGc.indexOf("\"gc_ms\":{") > withGc.indexOf("\"queries\":{"))
-    assert(withGc.indexOf("\"gc_ms\":{") < withGc.indexOf("\"sched\":{"))
-    // io_mb (r14): same contract as gc_ms, after the queries map
-    val withIo = Bench.renderFullRecord(results, sched, "/d",
-      ios = results.map { case (n, _) => n -> 234L })
-    assertFragments(withIo, results.map { case (n, _) => s"""\"$n\":234""" })
-    assert(withIo.indexOf("\"io_mb\":{") > withIo.indexOf("\"queries\":{"))
-    assert(withIo.indexOf("\"io_mb\":{") < withIo.indexOf("\"sched\":{"))
-    // alloc_mb (r16 verdict item 3): same contract again — the volume
-    // axis that disambiguates an inflated gc_ms after the fact
-    val withAl = Bench.renderFullRecord(results, sched, "/d",
-      als = results.map { case (n, _) => n -> 678L })
-    assertFragments(withAl, results.map { case (n, _) => s"""\"$n\":678""" })
-    assert(withAl.indexOf("\"alloc_mb\":{") > withAl.indexOf("\"queries\":{"))
-    assert(withAl.indexOf("\"alloc_mb\":{") < withAl.indexOf("\"sched\":{"))
-    // tasks/in_rows (r19, r18 verdict item 3): same contract — the
-    // deterministic volume axes, UNCLAMPED in the file record (the
-    // tail clamp is renderProbeContext's alone)
-    val withVol = Bench.renderFullRecord(results, sched, "/d",
-      tks = results.map { case (n, _) => n -> 1234L },
-      recs = results.map { case (n, _) => n -> 7999999999L })
-    assertFragments(withVol, results.map { case (n, _) => s"""\"$n\":1234""" })
-    assertFragments(withVol, results.map { case (n, _) => s"""\"$n\":7999999999""" })
-    assert(withVol.indexOf("\"tasks\":{") > withVol.indexOf("\"queries\":{"))
-    assert(withVol.indexOf("\"in_rows\":{") > withVol.indexOf("\"tasks\":{"))
-    assert(withVol.indexOf("\"in_rows\":{") < withVol.indexOf("\"sched\":{"))
-    // spill_mb/peak_mb (r20, r19 verdict item 1): the memory-pressure
-    // axes follow the same contract — after the queries map (the pin
-    // parser's first-} scan unaffected), before sched, UNCLAMPED here
-    val withMem = Bench.renderFullRecord(results, sched, "/d",
-      sps = results.map { case (n, _) => n -> 7777777L },
-      pks = results.map { case (n, _) => n -> 4321L })
-    assertFragments(withMem, results.map { case (n, _) => s"""\"$n\":7777777""" })
-    assertFragments(withMem, results.map { case (n, _) => s"""\"$n\":4321""" })
-    assert(withMem.indexOf("\"spill_mb\":{") > withMem.indexOf("\"in_rows\":{"))
-    assert(withMem.indexOf("\"peak_mb\":{") > withMem.indexOf("\"spill_mb\":{"))
-    assert(withMem.indexOf("\"peak_mb\":{") < withMem.indexOf("\"sched\":{"))
-    // vol_dirty (ADVICE r19): the unquiesced-window marker names land
-    // in the file record so a degraded-host run can never pass its
-    // tasks/in_rows off as exact readings
-    val withDirty = Bench.renderFullRecord(results, sched, "/d",
-      volDirty = Seq("dedup_delta", "dedup_exact"))
-    assert(withDirty.contains(
-      """"vol_dirty":["dedup_delta","dedup_exact"]"""), withDirty)
-    // cpus (r17): the file record self-describes its regime so the
-    // gen_benchref.py transcriber never has to guess the core count
-    // that refArmed will match. Scalar BEFORE the queries map (the
-    // pin parser's first-} scan is unaffected); omitted when empty so
-    // pre-r17 records keep their exact shape.
-    val withCpus = Bench.renderFullRecord(results, sched, "/d",
-      cpus = "32")
-    assert(withCpus.contains("\"cpus\":\"32\",\"queries\":{"), withCpus)
-    assert(!line.contains("\"cpus\""),
-      s"empty cpus must be omitted, not rendered: $line")
+  // Worst-case width: the real suite, every query at 99.999 s, and an
+  // sf path longer than any the bench is run with.
+  private lazy val worst = SparkEntry.selectNames(None).map(_ -> 99.999)
+  private lazy val worstLine = Bench.renderTotal(worst,
+    Bench.schedJson(12.345, 99.999, 12.345, 99.999),
+    "/data/" + "x" * 40 + "/sf0.1", fails = 107)
+
+  test("the full-suite last line fits the driver's 2000-byte tail") {
+    assert(worst.size >= 100, "suite lost its queries")
+    val bytes = worstLine.getBytes("UTF-8").length
+    assert(bytes <= Bench.MaxLineBytes, s"last line is $bytes bytes")
+    // the line plus its newline survives a 2000-byte stdout tail
+    val stdout = worst.map { case (n, s) => s"""{"q":"$n","sec":${Bench.fmt(s)}}""" }
+      .mkString("", "\n", "\n") + worstLine + "\n"
+    assert(stdout.takeRight(2000).linesIterator.toSeq.last == worstLine)
+
+    val json = parse(worstLine)
+    Seq("metric", "value", "unit", "n", "fails", "sched", "sf", "queries")
+      .foreach(k => assert(json.has(k), s"missing key $k"))
+    assert(json.get("n").asInt == worst.size)
+    // value sums ALL queries, not only the ones shown
+    assert(json.get("value").asDouble == Bench.fmt(worst.map(_._2).sum).toDouble)
   }
 
-  test("the committed comparator matches its source artifact's values") {
-    // BenchRef.committed is a hand-transcribed snapshot of the named
-    // artifact; the drift test below pins only the KEY SET, so a
-    // re-recorded comparator or a one-value transcription typo would
-    // silently skew which queries trigger sched_hit probes. Parse the
-    // artifact's `"queries":{...}` object (Bench writes it with
-    // code-controlled names and fmt-rendered values — no nesting, no
-    // escapes) and pin value-for-value equality.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(BenchRef.sourceFile)), "UTF-8")
-    val qStart = src.indexOf("\"queries\":{")
-    assert(qStart >= 0, s"${BenchRef.sourceFile} lost its queries map")
-    val body = src.substring(qStart + "\"queries\":{".length,
-      src.indexOf('}', qStart))
-    val parsed = body.split(',').map { kv =>
-      val Array(k, v) = kv.split(':')
-      k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble
-    }.toMap
-    assert(parsed.size == BenchRef.committed.size,
-      s"artifact has ${parsed.size} queries, BenchRef ${BenchRef.committed.size}")
-    val diffs = BenchRef.committed.collect {
-      case (k, v) if parsed.get(k) != Some(v) => s"$k: ref=$v art=${parsed.get(k)}"
-    }
-    assert(diffs.isEmpty,
-      s"BenchRef diverged from ${BenchRef.sourceFile}: ${diffs.take(5).mkString("; ")}")
-    // Regime provenance (r17 verdict item 4a + ADVICE): the values
-    // above are pinned, but a transcription slip in the REGIME fields
-    // (cpus / sf suffix) would mis-arm the outlier trigger — BenchRef
-    // would arm against a config the record was never measured in. Pin
-    // them against the generating record directly. The artifact's sf
-    // path must end in the committed suffix...
-    val sfIdx = src.indexOf("\"sf\":\"")
-    assert(sfIdx >= 0, s"${BenchRef.sourceFile} lost its sf field")
-    val sfVal = src.substring(sfIdx + "\"sf\":\"".length,
-      src.indexOf('"', sfIdx + "\"sf\":\"".length))
-    assert(sfVal.stripSuffix("/").endsWith(BenchRef.sfDirSuffix),
-      s"BenchRef.sfDirSuffix=${BenchRef.sfDirSuffix} but the artifact " +
-        s"was recorded at sf=$sfVal")
-    // ...and whenever the record self-describes its core count (the
-    // cpus field landed after the r17 record was written, so pre-r18
-    // records legitimately lack it — noted in BASELINE.md), it must
-    // match BenchRef.cpus. The next re-record is covered automatically.
-    val cpusIdx = src.indexOf("\"cpus\":\"")
-    if (cpusIdx >= 0) {
-      val cpusVal = src.substring(cpusIdx + "\"cpus\":\"".length,
-        src.indexOf('"', cpusIdx + "\"cpus\":\"".length))
-      assert(cpusVal == BenchRef.cpus,
-        s"BenchRef.cpus=${BenchRef.cpus} but the artifact records " +
-          s"cpus=$cpusVal — the transcription mis-arms the trigger")
-    }
-  }
+  test("the last line lists the heaviest queries within the tail cap") {
+    val bytes = worstLine.getBytes("UTF-8").length
+    val shown = parse(worstLine).get("queries").properties.asScala.toSeq
+      .map(e => e.getKey -> e.getValue.asDouble)
+    assert(shown.nonEmpty && shown.size < worst.size, s"${shown.size} shown")
+    val heaviest = worst.sortBy { case (n, s) => (-s, n) }
+    assert(shown == heaviest.take(shown.size).map { case (n, s) =>
+      n -> Bench.fmt(s).toDouble }, "queries is not the heaviest-first prefix")
+    // the map stops at the cap, not before it
+    val next = heaviest(shown.size)
+    assert(bytes + s""","${next._1}":${Bench.fmt(next._2)}""".length >
+      Bench.MaxLineBytes, "the map stopped short of the cap")
 
-  test("the committed comparator covers the suite exactly") {
-    // BenchRef is a regenerated snapshot; if the suite grows or a query
-    // is renamed without re-recording it, two guarantees silently rot:
-    // new queries get no outlier-probe coverage (committed.get = None),
-    // and the tail-budget tests above validate a stale, smaller block.
-    assert(BenchRef.committed.keySet == SparkEntry.selectNames(None).toSet,
-      "BenchRef drifted from the declared suite — regenerate it from " +
-        "the latest committed BENCH_LOCAL record")
+    // distinct times: the heaviest come first whatever the name order
+    val mixed = worst.zipWithIndex.map { case ((n, _), i) => n -> i / 10.0 }
+    val top = parse(Bench.renderTotal(mixed, sched, "/d"))
+      .get("queries").fieldNames.asScala.toSeq
+    assert(top == mixed.sortBy(-_._2).take(top.size).map(_._1))
   }
 
   test("fmt is locale-pinned to a dot decimal separator") {
@@ -530,13 +126,15 @@ class BenchFormatSpec extends AnyFunSuite {
   }
 
   test("sf dir is JSON-escaped; query names need no escaping") {
-    val line = Bench.renderTotalOnly(results, sched, """C:\data "x"""")
+    val line = Bench.renderTotal(results, sched, """C:\data "x"""")
     assert(line.contains(""""sf":"C:\\data \"x\""""))
+    assert(parse(line).get("sf").asText == """C:\data "x"""")
     assert(Bench.jstr("a\nb\tc") == "a\\u000ab\\u0009c")
   }
 
   test("empty suite still renders a parseable record") {
-    val line = Bench.renderTotalOnly(Seq.empty, sched, "/d")
-    assertFragments(line, Seq("\"value\":0.000", "\"n\":0"))
+    val line = Bench.renderTotal(Seq.empty, sched, "/d")
+    assertFragments(line, Seq("\"value\":0.000", "\"n\":0", "\"queries\":{}"))
+    parse(line)
   }
 }
